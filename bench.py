@@ -2,7 +2,8 @@
 
 Default mode: runs the headline query suite + the frontier throughput job at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the box's core count) and prints ONE
+JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": 0.1, "urls_per_sec": N, ...}
@@ -35,8 +36,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from price_crawler_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # headline operator queries from the driver-contract registry
 BENCH_QUERIES = [
@@ -120,21 +122,9 @@ def frontier_throughput(spark, sf_dir: str) -> tuple[int, float]:
     from pyspark.sql import functions as F
 
     from price_crawler_spark.functions.urls import (
-        canonicalize_with_host,
         canonicalize_with_host_arrow,
         url_hash,
     )
-
-    # A/B seam (VERDICT r2 item 2b): 'expr' = the codegen regexp chain,
-    # 'arrow' = the pandas-UDF batch canonicalizer. Same output (pytest
-    # parity-gated). Measured head-to-head (19.2M URLs, best-of-3, same box):
-    # expr 407k/s @8c, 1.01M/s @32c; arrow 826k/s @8c, 1.92M/s @32c — the
-    # Arrow batch halves the canonicalize cost at BOTH widths, so it is the
-    # default; full table in BASELINE.md.
-    canon_impl = {
-        "expr": canonicalize_with_host,
-        "arrow": canonicalize_with_host_arrow,
-    }[os.environ.get("SPARK_GRAFT_CANON_IMPL", "arrow")]
 
     n_part = spark.sparkContext.defaultParallelism * 2
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -179,7 +169,7 @@ def frontier_throughput(spark, sf_dir: str) -> tuple[int, float]:
 
     t0 = time.time()
     canon = (
-        raw.select(canon_impl("url").alias("c"), "o_totalprice")
+        raw.select(canonicalize_with_host_arrow("url").alias("c"), "o_totalprice")
         .select("c.canonical_url", "c.host", "o_totalprice")
         .withColumn("url_hash", url_hash("canonical_url"))
     )

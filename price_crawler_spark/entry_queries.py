@@ -1322,29 +1322,10 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     output also proves the dedup-key cardinality matches."""
     orders = _read(spark, sf_dir, "orders")
     return (
-        orders.select(urls.canonicalize_url(_raw_url_col()).alias("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@_register(
-    "url_canonicalize_arrow",
-    "WITH "
-    + urls.duckdb_canonical_cte(f"(SELECT {_RAW_URL_SQL} AS url FROM orders)", "url")
-    + "\nSELECT canonical_url, count(*) AS n FROM canon GROUP BY 1",
-)
-def q_url_canonicalize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow-batch canonicalizer (the frontier hot path's production
-    variant since the r3 A/B — BASELINE.md) against the SAME DuckDB mirror
-    as `url_canonicalize`, so both implementations carry a driver-green
-    oracle row."""
-    orders = _read(spark, sf_dir, "orders")
-    return (
         orders.select(
-            urls.canonicalize_with_host_arrow(_raw_url_col()).alias("c")
+            urls.canonicalize_with_host_arrow(_raw_url_col())["canonical_url"]
+            .alias("canonical_url")
         )
-        .select(F.col("c.canonical_url").alias("canonical_url"))
         .groupBy("canonical_url")
         .agg(F.count("*").alias("n"))
     )
@@ -2345,6 +2326,9 @@ _PRIORITY = [
     # openCostInBytes (ADVICE r4) — re-verify every query that calls it
     "dedup_minhash_lsh", "dedup_minhash_lsh_fast", "dedup_ngram_jaccard",
     "dedup_embedding_cosine",
+    # engine path changed: the Column chain gave way to the Arrow kernel,
+    # and the DuckDB mirror now coalesces an empty param list to ''
+    "url_canonicalize",
 ]
 _DEPRIORITIZED = [
     # hash-green in r4, code untouched in r5
@@ -2353,10 +2337,10 @@ _DEPRIORITIZED = [
     "name_clean_coolpc", "feature_extract", "dtsource_stock",
     "sort_by_name", "url_id_extract", "url_absolutize", "ua_rotation",
     "coolpc_js_arrays", "crawl_search_demo_rows", "momo_card_parse",
-    "sanjing_card_parse", "url_canonicalize_arrow", "dedup_simhash",
+    "sanjing_card_parse", "dedup_simhash",
     "crawl_search_demo", "name_clean_momo", "coolpc_option_scan",
     "bundle_detect", "pchome_stock", "sinya_detail_stock",
-    "url_canonicalize", "dedup_first_wins", "politeness_quota",
+    "dedup_first_wins", "politeness_quota",
     "topk_per_store", "price_stats", "store_stats",
     "windowed_event_counts", "similarity_match", "text_language_id",
     "text_quality", "text_token_counts", "text_fingerprint",

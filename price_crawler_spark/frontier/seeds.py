@@ -15,9 +15,10 @@ Store *rank* is the SCRAPERS dict insertion order (main.py:43-54) — the
 first component of the deterministic crawl order (SURVEY §3.1). Disabled
 stores (sanjing, momo, gh3c) are intentionally absent (§7.3 risk 8).
 
-The seed cross-join is built with ``explode`` over a literal store array so
-(queries × stores) never leaves the JVM; URL encoding uses ``url_encode``
-(quote_plus semantics: space → '+', matching urllib.parse.urlencode).
+The (queries × stores) seed list is built on the driver (``urllib.parse``
+quoting: quote_plus, space → '+', or quote, space → '%20', per store) and
+canonicalized by the same Arrow kernel as wave children, so a seed and a
+re-discovered child always share one ``url_hash``.
 """
 
 from __future__ import annotations
@@ -89,11 +90,16 @@ def seed_frontier(spark: SparkSession, queries: list[str]) -> DataFrame:
     of partitioning, so the key is *computed*, never assigned by zipWithIndex
     or monotonically_increasing_id).
     """
-    from price_crawler_spark.functions.urls import canonicalize_url, url_hash
+    from price_crawler_spark.functions.urls import (
+        canonicalize_with_host_arrow,
+        url_hash,
+    )
 
     df = spark.createDataFrame(seed_urls(queries))
     return (
-        df.withColumn("canonical_url", canonicalize_url("url"))
+        df.withColumn(
+            "canonical_url", canonicalize_with_host_arrow("url")["canonical_url"]
+        )
         .withColumn("url_hash", url_hash("canonical_url"))
         .withColumn("priority", F.lit(0))
         .withColumn("attempts", F.lit(0))

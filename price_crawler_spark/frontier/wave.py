@@ -134,7 +134,10 @@ class CrawlRun:
         # First-wins enqueue dedup — coolpc's query-independent search URL
         # appears once per query in the raw seed list but must enter the
         # frontier exactly once (reference: URL-seen checked at enqueue).
-        frontier = dedup_in_batch(frontier)
+        frontier = dedup_in_batch(frontier).persist()
+        # materialize once: the commit's three concurrent writes would each
+        # re-run the canonicalizer's Python UDF over a cold cache
+        frontier.count()
         seen = frontier.select("url_hash").distinct()
         bloom_table = self.bloom.insert(frontier.select("url_hash"), None)
         self.store.commit(
@@ -142,6 +145,7 @@ class CrawlRun:
             tables_append={"seen": seen},
             meta={"next_wave": 0, "queries": self.queries},
         )
+        frontier.unpersist()
 
     def next_wave(self) -> int:
         return int(self.store.latest_meta().get("next_wave", 0))
@@ -214,10 +218,8 @@ class CrawlRun:
         docs = docs_from_fetched(ok).withColumn("wave", F.lit(wave))
 
         children = links_from_fetched(ok).withColumn("wave", F.lit(wave + 1))
-        # Arrow-batch canonicalizer on the per-wave child expansion — the
-        # volume path at 10^10-URL scale (seeds stay on the expression chain:
-        # 7 rows/query doesn't amortize a Python worker round-trip). Output
-        # parity with canonicalize_url is pytest-gated; the crawl-order and
+        # Seeds and invalidate() canonicalize with the same kernel, so a URL
+        # hashes alike on every path into the seen set. The crawl-order and
         # URL-seen goldens run through this exact path.
         children = (
             children.withColumn("c", canonicalize_with_host_arrow("url"))
@@ -345,7 +347,6 @@ class CrawlRun:
         number of rows re-enqueued.
         """
         from price_crawler_spark.frontier.seen import ShardedCuckoo
-        from price_crawler_spark.functions.urls import canonicalize_with_host
 
         if not isinstance(self.bloom, ShardedCuckoo):
             raise ValueError(
@@ -358,9 +359,10 @@ class CrawlRun:
             return 0
         hashes = (
             spark.createDataFrame([(u,) for u in urls], "url string")
-            .select(canonicalize_with_host("url").alias("c"))
+            .select(canonicalize_with_host_arrow("url").alias("c"))
             .select(url_hash(F.col("c.canonical_url")).alias("url_hash"))
             .distinct()
+            .persist()  # read by four jobs; each would re-run the Python UDF
         )
         hits = log.join(hashes, "url_hash", "semi").filter(
             F.col("status") == "fetched"
@@ -398,6 +400,7 @@ class CrawlRun:
             meta={"next_wave": self.next_wave(), "queries": self.queries},
         )
         re_new.unpersist()
+        hashes.unpersist()
         return n
 
     # -- inspection ----------------------------------------------------------

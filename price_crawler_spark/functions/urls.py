@@ -12,9 +12,21 @@ a full, idempotent canonical form:
     5. drop tracking params (utm_*, fbclid, gclid, ref) and empty params
     6. sort remaining query params bytewise
 
-Everything is a native Column expression chain (regexp + higher-order array
-functions) so the 10^10-row frontier pass stays inside whole-stage codegen;
-the identical algorithm is expressible in DuckDB SQL for the oracle check.
+The engine has one implementation: pyarrow compute kernels
+(:func:`_canon_batch_pa`) behind a native ``arrow_udf``
+(:func:`canonicalize_with_host_arrow`), used by seeds, wave children,
+``CrawlRun.invalidate()`` and the ``url_canonicalize`` oracle query. Why not
+a codegen Column chain: its ~15 regexp_replace/regexp_extract steps each
+materialize a new UTF8String in the JVM heap (19M URLs × 15 passes = GC and
+memory-bus pressure that capped single-box N→4N scaling). The kernel ships
+each batch to a Python worker ONCE over Arrow and runs every step over
+contiguous buffers, outside the shared JVM heap. On the 19.2M-URL frontier
+job it took half the chain's wall time at both 8 and 32 cores (826k vs 407k
+URLs/s at 8 cores; BASELINE.md round 3).
+
+Two mirrors outside the engine check it: the DuckDB CTE below (the
+``url_canonicalize`` oracle and a Spark-free parity test) and
+``tests/oracle_crawler.canonicalize_py`` (the crawl oracle).
 """
 
 from __future__ import annotations
@@ -29,186 +41,14 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def canonicalize_with_host(col: Column | str) -> Column:
-    """(canonical_url, host) as ONE struct expression. The host subtree is
-    shared with the canonical-url subtree, so Catalyst's subexpression
-    elimination parses the URL once — `select(canonicalize_url(u),
-    url_host(u))` as two separate expressions parses it twice."""
-    u = F.trim(_col(col))
-    u = F.regexp_replace(u, r"#.*$", "")
-
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    rest = F.regexp_replace(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    hostport = F.lower(F.regexp_extract(rest, r"^([^/?#]*)", 1))
-    tail = F.regexp_replace(rest, r"^[^/?#]*", "")
-    path = F.regexp_extract(tail, r"^([^?#]*)", 1)
-    qs = F.regexp_extract(tail, r"\?([^#]*)", 1)
-
-    host = F.regexp_replace(hostport, r"\.+(:\d*)?$", "$1")
-    host = F.when(scheme == "http", F.regexp_replace(host, r":80$", "")).otherwise(
-        F.when(scheme == "https", F.regexp_replace(host, r":443$", "")).otherwise(host)
-    )
-
-    path = F.regexp_replace(path, r"/{2,}", "/")
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    path = F.when(path != "/", F.regexp_replace(path, r"/$", "")).otherwise(path)
-
-    params = F.split(qs, "&")
-    kept = F.filter(
-        params,
-        lambda p: (p != F.lit("")) & ~p.rlike(TRACKING_PARAM_PATTERN),
-    )
-    qs_norm = F.array_join(F.array_sort(kept), "&")
-
-    canonical = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        path,
-        F.when(qs_norm == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs_norm)),
-    )
-    bare_host = F.regexp_replace(host, r":\d+$", "")
-    return F.struct(
-        canonical.alias("canonical_url"), bare_host.alias("host")
-    )
-
-
-def canonicalize_url(col: Column | str) -> Column:
-    u = F.trim(_col(col))
-    u = F.regexp_replace(u, r"#.*$", "")  # strip fragment
-
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    rest = F.regexp_replace(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    hostport = F.lower(F.regexp_extract(rest, r"^([^/?#]*)", 1))
-    tail = F.regexp_replace(rest, r"^[^/?#]*", "")
-    path = F.regexp_extract(tail, r"^([^?#]*)", 1)
-    qs = F.regexp_extract(tail, r"\?([^#]*)", 1)
-
-    # trailing host dots (no lookahead: DuckDB's RE2 silently ignores (?=...),
-    # so both mirrors use a capture group instead)
-    host = F.regexp_replace(hostport, r"\.+(:\d*)?$", "$1")
-    host = F.when(scheme == "http", F.regexp_replace(host, r":80$", "")).otherwise(
-        F.when(scheme == "https", F.regexp_replace(host, r":443$", "")).otherwise(host)
-    )
-
-    path = F.regexp_replace(path, r"/{2,}", "/")
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    path = F.when(path != "/", F.regexp_replace(path, r"/$", "")).otherwise(path)
-
-    params = F.split(qs, "&")
-    kept = F.filter(
-        params,
-        lambda p: (p != F.lit(""))
-        & ~p.rlike(TRACKING_PARAM_PATTERN),
-    )
-    qs_norm = F.array_join(F.array_sort(kept), "&")
-
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        path,
-        F.when(qs_norm == "", F.lit("")).otherwise(F.concat(F.lit("?"), qs_norm)),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Arrow-batch variant of the canonicalizer (A/B alternative to the expression
-# chain above; same algorithm, same output — parity is pytest-gated against
-# both the Column chain and the pure-Python mirror in tests/oracle_crawler.py)
-# ---------------------------------------------------------------------------
-#
-# Why it exists: the ~15-step regexp_replace/regexp_extract chain is the
-# frontier hot path's bandwidth hog (each step materializes a new UTF8String
-# in the JVM heap; 19M URLs × 15 passes = GC + memory-bus pressure that caps
-# single-box N→4N scaling). This variant ships each partition to a Python
-# worker ONCE over Arrow, canonicalizes with str slicing + 3 precompiled
-# regexes (each applied only on the rare rows that need them), and returns
-# the (canonical_url, host) struct in one batch. Python workers are separate
-# processes, so the work also escapes the single shared JVM heap — on a real
-# cluster either form scales; on one box this one scales measurably better
-# (A/B numbers in BASELINE.md).
-
-import re as _re
-
-_SCHEME_RE = _re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*)://")
-_HOSTDOTS_RE = _re.compile(r"\.+(:\d*)?$")
-_SLASHRUN_RE = _re.compile(r"/{2,}")
-_PORT_RE = _re.compile(r":\d+$")
-
-
-def _canon_pair_py(url):
-    """(canonical_url, bare_host) — algorithm identical to
-    :func:`canonicalize_with_host`, step numbers from the module docstring."""
-    if url is None:
-        return None, None
-    u = url.strip(" ")  # spaces only, matching F.trim / DuckDB trim()
-    h = u.find("#")  # 1. strip fragment
-    if h != -1:
-        u = u[:h]
-    m = _SCHEME_RE.match(u)
-    if m:  # 2. lowercase scheme
-        scheme = m.group(1).lower()
-        rest = u[m.end():]
-    else:
-        scheme = ""
-        rest = u
-    cut = len(rest)
-    i = rest.find("/")
-    if i != -1:
-        cut = i
-    i = rest.find("?")
-    if i != -1 and i < cut:
-        cut = i
-    hostport = rest[:cut].lower()
-    tail = rest[cut:]
-    qi = tail.find("?")
-    if qi == -1:
-        path, qs = tail, ""
-    else:
-        path, qs = tail[:qi], tail[qi + 1:]
-    # 3. trailing host dots + default ports (regex only when plausibly needed)
-    host = _HOSTDOTS_RE.sub(r"\1", hostport) if "." in hostport else hostport
-    if scheme == "http" and host.endswith(":80"):
-        host = host[:-3]
-    elif scheme == "https" and host.endswith(":443"):
-        host = host[:-4]
-    # 4. collapse duplicate slashes; '' → '/'; strip trailing slash
-    if "//" in path:
-        path = _SLASHRUN_RE.sub("/", path)
-    if path == "":
-        path = "/"
-    elif path != "/" and path.endswith("/"):
-        path = path[:-1]
-    # 5./6. drop tracking + empty params, sort bytewise
-    if qs:
-        kept = []
-        for p in qs.split("&"):
-            if not p:
-                continue
-            name = p.partition("=")
-            if name[1] and (
-                name[0].startswith("utm_") or name[0] in ("fbclid", "gclid", "ref")
-            ):
-                continue
-            kept.append(p)
-        kept.sort()
-        qsn = "&".join(kept)
-    else:
-        qsn = ""
-    canonical = f"{scheme}://{host}{path}" + (f"?{qsn}" if qsn else "")
-    bare_host = _PORT_RE.sub("", host)
-    return canonical, bare_host
-
-
 def _canon_batch_pa(arr):
     """Vectorized (canonical_url, host) over a ``pyarrow`` string array —
     every step is a C++ compute kernel over contiguous buffers, so per-URL
-    Python object churn is zero. Algorithm identical to
-    :func:`canonicalize_with_host` / :func:`_canon_pair_py`; parity is
-    pytest-gated against both. The only numpy round-trip is the per-batch
-    list-offset rebuild for the query-param sort (arrow has no per-list
-    sort kernel), which is O(rows), not O(bytes).
+    Python object churn is zero. Step numbers are the module docstring's;
+    parity with :data:`DUCKDB_CANONICAL_CTE` is pytest-gated without Spark.
+    The only numpy round-trip is the per-batch list-offset rebuild for the
+    query-param sort (arrow has no per-list sort kernel), which is O(rows),
+    not O(bytes).
     """
     import numpy as np
     import pyarrow as pa
@@ -216,9 +56,8 @@ def _canon_batch_pa(arr):
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    # spaces ONLY — the expression chain's F.trim and the DuckDB oracle's
-    # trim() strip ' ' alone, so tab/newline padding must survive here too
-    # for the three impls to canonicalize identically (ADVICE r3)
+    # spaces ONLY — the DuckDB mirror's trim() strips ' ' alone, so
+    # tab/newline padding must survive here too (ADVICE r3)
     u = pc.utf8_trim(arr, " ")
     u = pc.replace_substring_regex(u, pattern=r"#.*$", replacement="")
     sm = pc.extract_regex(u, r"^(?P<s>[A-Za-z][A-Za-z0-9+.\-]*)://")
@@ -298,54 +137,29 @@ def _canon_batch_pa(arr):
 
 
 def canonicalize_with_host_arrow(col: Column | str) -> Column:
-    """Arrow-batch twin of :func:`canonicalize_with_host`.
+    """(canonical_url, host) struct of ``col``: the engine's canonicalizer.
 
-    Same output struct, same algorithm; see the block comment above for when
-    to prefer it. Uses a native ``arrow_udf`` (PySpark ≥ 4.0: pyarrow
-    arrays in and out, no pandas object round-trip) over the vectorized
-    kernel pipeline in :func:`_canon_batch_pa`; falls back to a pandas UDF
-    around the same kernels on older runtimes. Declared lazily so importing
-    this module never forces a pandas/pyarrow import on executors that
-    don't use it.
+    A native ``arrow_udf`` (PySpark ≥ 4.1: pyarrow arrays in and out, no
+    pandas object round-trip) over the kernel pipeline in
+    :func:`_canon_batch_pa`. ``host`` is the canonical host without its
+    port. Declared lazily so importing this module never forces a pyarrow
+    import on executors that don't use it.
     """
-    try:
-        from pyspark.sql.functions import arrow_udf
-    except ImportError:
-        arrow_udf = None
+    # explicit ArrowUDFType.SCALAR: this module uses
+    # `from __future__ import annotations`, which turns type hints into
+    # strings that arrow_udf's hint inference can't resolve
+    from pyspark.sql.functions import ArrowUDFType, arrow_udf
 
-    if arrow_udf is not None:
-        # explicit ArrowUDFType.SCALAR: this module uses
-        # `from __future__ import annotations`, which turns type hints into
-        # strings that arrow_udf's hint inference can't resolve
-        from pyspark.sql.functions import ArrowUDFType
-
-        @arrow_udf("canonical_url string, host string", ArrowUDFType.SCALAR)
-        def _canon_udf(urls):
-            import pyarrow as pa
-
-            canonical, bare_host = _canon_batch_pa(urls)
-            return pa.StructArray.from_arrays(
-                [canonical, bare_host], names=["canonical_url", "host"]
-            )
-
-        return _canon_udf(_col(col))
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("canonical_url string, host string")
-    def _canon_udf_pd(urls):
-        import pandas as pd
+    @arrow_udf("canonical_url string, host string", ArrowUDFType.SCALAR)
+    def _canon_udf(urls):
         import pyarrow as pa
 
-        canonical, bare_host = _canon_batch_pa(pa.Array.from_pandas(urls))
-        return pd.DataFrame(
-            {
-                "canonical_url": canonical.to_pandas(),
-                "host": bare_host.to_pandas(),
-            }
+        canonical, bare_host = _canon_batch_pa(urls)
+        return pa.StructArray.from_arrays(
+            [canonical, bare_host], names=["canonical_url", "host"]
         )
 
-    return _canon_udf_pd(_col(col))
+    return _canon_udf(_col(col))
 
 
 DUCKDB_CANONICAL_CTE = r"""
@@ -388,8 +202,8 @@ canon AS (
         _scheme || '://' || _host || _path ||
         CASE WHEN _qsn = '' THEN '' ELSE '?' || _qsn END AS canonical_url
     FROM (
-        SELECT *, array_to_string(list_sort(list_filter(string_split(_qs, '&'),
-            p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|ref)='))), '&') AS _qsn
+        SELECT *, coalesce(array_to_string(list_sort(list_filter(string_split(_qs, '&'),
+            p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|ref)='))), '&'), '') AS _qsn
         FROM canon_norm
     )
 )
@@ -397,13 +211,16 @@ canon AS (
 
 
 def duckdb_canonical_cte(source: str, url_expr: str) -> str:
-    """DuckDB CTE chain mirroring :func:`canonicalize_url` step-for-step.
+    """DuckDB CTE chain mirroring :func:`_canon_batch_pa` step-for-step.
 
     Usage: ``f"WITH {duckdb_canonical_cte('frontier_view','url')} SELECT
     canonical_url ... FROM canon"``. Keeping the mirror next to the Spark
     implementation makes drift visible in review. Note DuckDB's
-    ``regexp_replace`` needs the explicit 'g' flag where Spark always
-    replaces globally (only the slash-collapse step is non-anchored here).
+    ``regexp_replace`` needs the explicit 'g' flag where pyarrow replaces
+    globally (only the slash-collapse step is non-anchored here), and its
+    ``array_to_string`` of an empty list is NULL, hence the ``coalesce``
+    on ``_qsn``. Trailing host dots use a capture group, not a lookahead,
+    in both implementations: DuckDB's RE2 silently ignores ``(?=...)``.
     """
     return DUCKDB_CANONICAL_CTE.format(source=source, url_expr=url_expr)
 

@@ -75,9 +75,10 @@ def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     into 1-2 partitions — is estimated as the few bins it really becomes,
     not as one split per file (the old ``len(files) >= target`` early exit
     equated file count with partition count and silently skipped the
-    repartition exactly there). A non-local file whose size can't be
-    stat'd contributes openCost only (under-estimating only risks one
-    cheap skinny-row shuffle, never a wrong result). Non-file inputs
+    repartition exactly there). A file whose size can't be stat'd (a
+    remote object store, say) counts as one full ``maxPartitionBytes``
+    bin: counting it as openCost alone would estimate a wide remote scan
+    at a few bins and shuffle all of it. Non-file inputs
     (in-memory test frames, post-shuffle plans) are left untouched — their
     parallelism is already the session's.
     """
@@ -96,10 +97,11 @@ def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     for uri in files:
         p = urlparse(uri)
         try:
-            size = os.path.getsize(p.path if p.scheme in ("", "file") else uri)
+            chunk = os.path.getsize(p.path if p.scheme in ("", "file") else uri)
+            chunk += open_cost
         except OSError:
-            size = 0
-        packed += size + open_cost
+            chunk = max_bytes
+        packed += chunk
         if math.ceil(packed / max_bytes) >= target:
             return df  # enough estimated bins — wide scan, guard is a no-op
     return df.repartition(target)

@@ -10,7 +10,8 @@ Usage:
 
 r4 record: all 11 probed queries (dedup families, sign-LSH ANN,
 politeness quota, top-k, arrow canonicalizer, windowed counts, P4)
-matched bit-for-bit.
+matched bit-for-bit (the canonicalizer was then probed as
+`url_canonicalize_arrow`; that query is now `url_canonicalize`).
 """
 import hashlib
 import json
@@ -24,7 +25,7 @@ from price_crawler_spark.session import get_spark  # noqa: E402
 QS = [
     "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
     "dedup_embedding_cosine", "ann_signlsh_topk", "politeness_quota",
-    "topk_per_store", "url_canonicalize_arrow", "windowed_event_counts",
+    "topk_per_store", "url_canonicalize", "windowed_event_counts",
     "coolpc_js_arrays", "dedup_minhash_lsh_fast",
 ]
 

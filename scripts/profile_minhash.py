@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from price_crawler_spark.functions.text import shingles
 from price_crawler_spark.pipeline import dedup
-from price_crawler_spark.session import get_spark
+from price_crawler_spark.session import DEFAULT_CPUS, get_spark
 
 
 def _noop(df) -> None:
@@ -36,7 +36,7 @@ def _noop(df) -> None:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     spark = get_spark("profile-minhash", cores=cpus, shuffle_partitions=cpus)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"

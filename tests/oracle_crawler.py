@@ -19,8 +19,9 @@ TRACKING = re.compile(r"^(utm_[^=]*|fbclid|gclid|ref)=")
 
 
 def canonicalize_py(url: str) -> str:
-    """Python mirror of functions.urls.canonicalize_url (kept in tests so the
-    engine has exactly one canonicalizer; parity asserted in test_urls)."""
+    """Python mirror of functions.urls.canonicalize_with_host_arrow's
+    canonical_url (kept in tests so the engine has exactly one
+    canonicalizer; parity asserted in test_frontier's canonicalizer tests)."""
     u = re.sub(r"#.*$", "", url.strip())
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]*)://", u)
     scheme = m.group(1).lower() if m else ""
@@ -42,6 +43,24 @@ def canonicalize_py(url: str) -> str:
     params = sorted(p for p in qs.split("&") if p and not TRACKING.match(p))
     qsn = "&".join(params)
     return f"{scheme}://{host}{path}" + (f"?{qsn}" if qsn else "")
+
+
+def duckdb_canonical_rows(urls: list) -> list:
+    """(canonical_url, port-stripped host) per URL, in input order, from the
+    DuckDB mirror of the engine's canonicalizer (``duckdb_canonical_cte``)."""
+    import duckdb
+    import pyarrow as pa
+
+    from price_crawler_spark.functions.urls import duckdb_canonical_cte
+
+    src = pa.table({"i": range(len(urls)), "url": pa.array(urls, pa.string())})
+    with duckdb.connect() as con:
+        con.register("src", src)
+        return con.sql(
+            f"WITH {duckdb_canonical_cte('src', 'url')} "
+            r"SELECT canonical_url, regexp_replace(_host, ':\d+$', '') "
+            "FROM canon ORDER BY i"
+        ).fetchall()
 
 
 def oracle_crawl(

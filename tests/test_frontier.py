@@ -14,9 +14,9 @@ from price_crawler_spark.frontier.seen import (
     filter_new,
 )
 from price_crawler_spark.frontier.wave import CrawlRun
-from price_crawler_spark.functions.urls import canonicalize_url
+from price_crawler_spark.functions.urls import canonicalize_with_host_arrow
 
-from .oracle_crawler import canonicalize_py, oracle_crawl
+from .oracle_crawler import canonicalize_py, duckdb_canonical_rows, oracle_crawl
 
 QUERIES = ["RTX 4090", "RX 9070"]
 WAVE_SECONDS = 10.0
@@ -35,22 +35,15 @@ def oracle():
     return oracle_crawl(QUERIES, wave_seconds=WAVE_SECONDS, max_waves=8)
 
 
-def test_canonicalizer_python_mirror(spark):
-    urls = [
-        "HTTPS://Shop.Example.COM:443//a//b/?utm_source=x&b=2&a=1#frag",
-        "http://example.com",
-        "https://www.mypc.com.tw/product.php?act=search&keywords=RTX+4090",
-        "https://24h.pchome.com.tw/search/?q=RX%209070",
-    ]
+def _canonical_urls(spark, urls):
     df = spark.createDataFrame([(u,) for u in urls], ["u"])
-    got = [r[0] for r in df.select(canonicalize_url("u")).collect()]
-    assert got == [canonicalize_py(u) for u in urls]
+    canon = canonicalize_with_host_arrow("u")["canonical_url"]
+    return [r[0] for r in df.select(canon).collect()]
 
 
-def test_property_canonicalizer_parity(spark):
-    """Engine canonicalizer vs the pure-Python mirror on 400 adversarial
-    URL combinations: mixed-case schemes/hosts, default and odd ports,
-    doubled slashes, trailing host dots, tracking params, duplicate params,
+def _adversarial_urls():
+    """400 URLs: mixed-case schemes/hosts, default and odd ports, doubled
+    slashes, trailing host dots, tracking params, duplicate params,
     fragments, empty paths."""
     import random
 
@@ -62,60 +55,56 @@ def test_property_canonicalizer_parity(spark):
     qs = ["", "?a=1", "?utm_source=x", "?b=2&a=1&utm_campaign=z&ref=r",
           "?a=1&a=0", "?fbclid=42&z=9"]
     frags = ["", "#f", "#a/b?c=1"]
-    cases = [
+    return [
         rng.choice(schemes) + "://" + rng.choice(hosts) + rng.choice(ports)
         + rng.choice(paths) + rng.choice(qs) + rng.choice(frags)
         for _ in range(400)
     ]
-    df = spark.createDataFrame([(u,) for u in cases], ["u"])
-    got = [r[0] for r in df.select(canonicalize_url("u")).collect()]
-    expected = [canonicalize_py(u) for u in cases]
-    assert got == expected
 
 
-def test_canonicalizer_arrow_variant_parity(spark):
-    """The Arrow-batch canonicalizer (bench A/B fast path) must emit the
-    exact (canonical_url, host) struct of the expression chain on the same
-    400 adversarial combinations plus bench-shaped frontier URLs."""
-    import random
+def test_canonicalizer_python_mirror(spark):
+    urls = [
+        "HTTPS://Shop.Example.COM:443//a//b/?utm_source=x&b=2&a=1#frag",
+        "http://example.com",
+        "https://www.mypc.com.tw/product.php?act=search&keywords=RTX+4090",
+        "https://24h.pchome.com.tw/search/?q=RX%209070",
+    ]
+    assert _canonical_urls(spark, urls) == [canonicalize_py(u) for u in urls]
 
-    from price_crawler_spark.functions.urls import (
-        canonicalize_with_host,
-        canonicalize_with_host_arrow,
-    )
 
-    rng = random.Random(13)
-    schemes = ["http", "HTTP", "https", "HtTpS", "ftp"]
-    hosts = ["Shop.Example.COM", "a.b.c", "X9.example.com.", "localhost"]
-    ports = ["", ":80", ":443", ":8080"]
-    paths = ["", "/", "//a//b", "/a/b/", "/a.b/c", "/x%20y", "///"]
-    qs = ["", "?a=1", "?utm_source=x", "?b=2&a=1&utm_campaign=z&ref=r",
-          "?a=1&a=0", "?fbclid=42&z=9"]
-    frags = ["", "#f", "#a/b?c=1"]
-    cases = [
-        rng.choice(schemes) + "://" + rng.choice(hosts) + rng.choice(ports)
-        + rng.choice(paths) + rng.choice(qs) + rng.choice(frags)
-        for _ in range(400)
-    ] + [
+def test_property_canonicalizer_parity(spark):
+    """Engine canonicalizer vs the pure-Python mirror on 400 adversarial
+    URL combinations."""
+    cases = _adversarial_urls()
+    assert _canonical_urls(spark, cases) == [canonicalize_py(u) for u in cases]
+
+
+def test_canonicalizer_arrow_variant_parity():
+    """The Arrow kernel, called without Spark, emits the DuckDB mirror's
+    exact (canonical_url, port-stripped host) on the 400 adversarial
+    combinations, bench-shaped frontier URLs and whitespace padding. Many
+    of them filter their query string down to nothing (no '?', a bare '?',
+    only tracking params)."""
+    import pyarrow as pa
+
+    from price_crawler_spark.functions.urls import _canon_batch_pa
+
+    cases = _adversarial_urls() + [
         f"https://Shop{i % 64}.example.com/item/{i}?a=1&utm_source=v{i}&b={i % 4}"
         for i in range(100)
     ] + [
-        # whitespace padding: ' ' strips in every impl; tab/newline must
-        # SURVIVE in every impl (F.trim / DuckDB trim() are space-only —
-        # ADVICE r3 arrow-vs-expr drift case)
+        # whitespace padding: ' ' strips; tab/newline must SURVIVE
+        # (DuckDB trim() is space-only — ADVICE r3 drift case)
         "  https://pad.example.com/a?b=1  ",
         "\thttps://pad.example.com/a?b=1\t",
         "\nhttps://pad.example.com/a?b=1\n",
         " \t https://pad.example.com/a ",
     ]
-    df = spark.createDataFrame([(u,) for u in cases], ["u"])
-    expr_rows = df.select(canonicalize_with_host("u").alias("c")).select(
-        "c.canonical_url", "c.host"
-    ).collect()
-    arrow_rows = df.select(canonicalize_with_host_arrow("u").alias("c")).select(
-        "c.canonical_url", "c.host"
-    ).collect()
-    assert [tuple(r) for r in arrow_rows] == [tuple(r) for r in expr_rows]
+    canonical, host = _canon_batch_pa(pa.array(cases, pa.string()))
+    got = list(zip(canonical.to_pylist(), host.to_pylist()))
+    expected = duckdb_canonical_rows(cases)
+    assert len(got) == len(expected) == 504
+    assert got == expected
 
 
 def test_crawl_order_matches_reference_oracle(crawl, oracle):

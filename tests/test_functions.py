@@ -140,14 +140,18 @@ CANON_CASES = {
 }
 
 
+def _canonical_url(c):
+    return urls.canonicalize_with_host_arrow(c)["canonical_url"]
+
+
 def test_canonicalize_url(spark):
-    got = _vals(spark, urls.canonicalize_url, list(CANON_CASES))
+    got = _vals(spark, _canonical_url, list(CANON_CASES))
     assert got == list(CANON_CASES.values())
 
 
 def test_canonicalize_idempotent(spark):
-    once = _vals(spark, urls.canonicalize_url, list(CANON_CASES))
-    twice = _vals(spark, urls.canonicalize_url, once)
+    once = _vals(spark, _canonical_url, list(CANON_CASES))
+    twice = _vals(spark, _canonical_url, once)
     assert once == twice
 
 

@@ -294,17 +294,15 @@ def test_coolpc_js_arrays_adversarial_pages(spark):
 
 def test_canonicalizer_impls_agree_on_junk(spark):
     """Degenerate URLs (NULL, empty, bare scheme, unicode host/query, 5k-char
-    tail, 1000-segment path) canonicalize identically through the expression
-    chain and the Arrow kernel batch."""
-    from price_crawler_spark.functions.urls import (
-        canonicalize_with_host,
-        canonicalize_with_host_arrow,
-    )
+    tail, 1000-segment path) canonicalize identically through the engine's
+    Arrow canonicalizer in Spark and the DuckDB mirror."""
+    from price_crawler_spark.functions.urls import canonicalize_with_host_arrow
+
+    from .oracle_crawler import duckdb_canonical_rows
 
     junk = [None, "", "   ", "####", "http://", "://x", "http://:80",
             "https://例子.中国/路径?ключ=значение#f", "a" * 5000,
             "http://h/" + "p/" * 1000]
     df = spark.createDataFrame([(u,) for u in junk], "u string")
-    a = df.select(canonicalize_with_host("u").alias("c")).collect()
-    b = df.select(canonicalize_with_host_arrow("u").alias("c")).collect()
-    assert [tuple(r["c"]) for r in a] == [tuple(r["c"]) for r in b]
+    got = df.select(canonicalize_with_host_arrow("u").alias("c")).collect()
+    assert [tuple(r["c"]) for r in got] == duckdb_canonical_rows(junk)

@@ -63,19 +63,27 @@ def test_small_dim_join_broadcasts(spark, orders):
 
 
 def test_extraction_stays_in_codegen(spark):
-    """The scalar-function library compiles into whole-stage codegen — no
-    interpreted eval, no Python in the plan."""
+    """Price extraction compiles into whole-stage codegen with no Python in
+    the plan; the URL canonicalizer crosses to Python only as Arrow batches
+    (ArrowEvalPython), never row-at-a-time (BatchEvalPython)."""
     from price_crawler_spark.functions.prices import extract_price
-    from price_crawler_spark.functions.urls import canonicalize_with_host
+    from price_crawler_spark.functions.urls import canonicalize_with_host_arrow
 
     part = spark.read.parquet(f"{SF}/part.parquet")
     df = part.select(
         extract_price(F.concat(F.lit("NT$"), F.col("p_retailprice"))).alias("p"),
-        canonicalize_with_host(F.concat(F.lit("https://x.com/a?b="), "p_name")).alias("c"),
     )
     assert_wholestage_codegen(df)
     plan = explain_str(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    canon = part.select(
+        canonicalize_with_host_arrow(
+            F.concat(F.lit("https://x.com/a?b="), "p_name")
+        ).alias("c")
+    )
+    plan = explain_str(canon)
+    assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
 
 
 def test_similarity_is_arrow_not_row_python(spark):
@@ -176,3 +184,25 @@ def test_scan_guard_repartitions_narrow_file_scan_without_rdd_probe(spark):
     assert _size_to_bytes("1g") == 1 << 30
     assert _size_to_bytes("512kb") == 512 << 10
     assert _size_to_bytes("64b") == 64
+
+
+def test_scan_guard_counts_unstattable_file_as_full_bin(spark, tmp_path, monkeypatch):
+    """A file the guard cannot stat (a remote object store) counts as one
+    full maxPartitionBytes bin, not openCostInBytes alone: a scan of
+    defaultParallelism such files is wide and must not be repartitioned.
+    The same tiny files, stat'd, pack into one bin and are."""
+    import os
+
+    from price_crawler_spark.plans.partitioning import ensure_scan_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    spark.range(0, target, 1, target).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    assert len(df.inputFiles()) == target
+    assert ensure_scan_parallelism(df) is not df  # tiny local files: narrow
+
+    def unstattable(path):
+        raise OSError(f"cannot stat {path}")
+
+    monkeypatch.setattr(os.path, "getsize", unstattable)
+    assert ensure_scan_parallelism(df) is df
