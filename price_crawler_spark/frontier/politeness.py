@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from price_crawler_spark.plans.partitioning import host_salt
+
 
 def schedule_wave(
     pending: DataFrame,
@@ -79,13 +81,9 @@ def schedule_wave(
     )
 
     if mega_hosts:
-        salt = F.when(
-            F.col("host").isin(mega_hosts),
-            F.pmod(F.col("url_hash"), F.lit(salt_buckets)),
-        ).otherwise(F.lit(0))
         w1 = Window.partitionBy("host", "_salt").orderBy("priority", "seq_key")
         pre = (
-            allowed.withColumn("_salt", salt)
+            allowed.withColumn("_salt", host_salt(mega_hosts, salt_buckets))
             .withColumn("_r1", F.row_number().over(w1))
             .filter(F.col("_r1") <= quota)
             .drop("_salt", "_r1")
@@ -122,9 +120,5 @@ def with_host_salt(df: DataFrame, mega_hosts: list[str], buckets: int = 16) -> D
     Applied AFTER quota ranking; combined with AQE skew-join splitting
     (spark.sql.adaptive.skewJoin.enabled, on in the session factory).
     """
-    salt = F.when(
-        F.col("host").isin(mega_hosts), F.pmod(F.col("url_hash"), F.lit(buckets))
-    ).otherwise(F.lit(0))
-    return df.withColumn(
-        "host_salt", F.concat_ws("#", F.col("host"), salt.cast("string"))
-    )
+    salt = host_salt(mega_hosts, buckets).cast("string")
+    return df.withColumn("host_salt", F.concat_ws("#", F.col("host"), salt))

@@ -5,29 +5,33 @@ Layered design:
   1. in-batch exact dedup — first-wins by ``seq_key`` within the wave's
      candidate minibatch (window row_number, reproducing the reference's
      insertion-order first-wins at sunfar.py:49-71).
-  2. sharded Bloom prefilter — ``shard = pmod(h1, n_shards)``; each shard is
-     a fixed bit array. Candidates whose bits are not all set are DEFINITELY
-     new and skip the expensive exact check entirely. Bloom determinism
-     (SURVEY §7.3 risk 5): the hash family is (h1 + i·h2) mod m with
-     h1 = xxhash64(canonical_url), h2 = xxhash64(h1) — both computed
-     JVM-side with Spark's fixed-seed xxhash64, and n_shards is independent
-     of parallelism, so false positives are identical across runs and
-     cluster sizes.
+  2. sharded probabilistic prefilter — ``shard = pmod(url_hash, n_shards)``
+     (``partitioning.seen_shard``); each shard is one byte blob. Candidates
+     the filter does not hold are DEFINITELY new and skip the exact check.
+     One pipeline (:class:`ShardedFilter`) owns the shard key, the probe
+     cogroup and the mutate cogroup; two per-shard numpy kernels plug in:
+       * :class:`ShardedBloom` — a bit array, hash family (h1 + i·h2) mod m
+         with h1 = xxhash64(canonical_url), h2 = xxhash64(h1), both computed
+         JVM-side with Spark's fixed-seed xxhash64;
+       * :class:`ShardedCuckoo` — a :class:`CuckooShard` table of 16-bit
+         fingerprints that also supports DELETE (re-crawl invalidation).
+     n_shards is independent of parallelism, so false positives and shard
+     bytes are identical across runs and cluster sizes (SURVEY §7.3 risk 5).
   3. exact anti-join — only the maybe-seen residue joins against the seen
      table (left_anti on url_hash). The FINAL seen set is therefore exact;
-     Bloom only prunes shuffle volume (at 10^10 URLs the residue is ~fp-rate
-     of the batch, so the anti-join input shrinks by ~100×).
+     the prefilter only prunes shuffle volume (at 10^10 URLs the residue is
+     ~fp-rate of the batch, so the anti-join input shrinks by ~100×).
 
-The bit arrays travel as parquet BINARY rows (shard, bits) co-partitioned
-with candidates on ``shard`` — probe and insert are ``applyInPandas`` over
-that co-partitioning, pure numpy inside (vectorized, no per-row Python).
+The blobs travel as parquet BINARY rows (shard, bits) co-partitioned with
+candidates on ``shard``: probe and insert/delete are ``applyInPandas``
+cogroups, so a shard's bytes cross the shuffle once per shard, never per
+candidate row. Every probe kernel is a numpy gather (no per-row Python);
+the cuckoo insert/delete walk is per-row by nature and runs over the
+shard's hashes in sorted order so its bytes are partitioning-independent.
 Sizing: bits_per_shard=2^20 × 64 shards ≈ 8 MB handles ~5·10^7 URLs at
 k=5; at 10^10 scale configure n_shards=4096 × 2^27 bits (~64 GB across the
 cluster, ~16 MB per shard task) — shard count scales independently of
 executor count.
-
-A cuckoo-filter variant (deletions, e.g. re-crawl invalidation) lives in
-:class:`CuckooShard`.
 """
 
 from __future__ import annotations
@@ -38,7 +42,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-BLOOM_SCHEMA = T.StructType(
+from price_crawler_spark.plans.partitioning import N_SEEN_SHARDS, seen_shard
+
+FILTER_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType(), False),
         T.StructField("bits", T.BinaryType(), False),
@@ -46,99 +52,154 @@ BLOOM_SCHEMA = T.StructType(
 )
 
 
-def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(n,) int64 pairs -> (n, k) bit positions, double-hashing scheme."""
-    u1 = h1.astype(np.uint64)
-    u2 = h2.astype(np.uint64)
-    i = np.arange(k, dtype=np.uint64)[None, :]
-    return ((u1[:, None] + i * u2[:, None]) % np.uint64(m)).astype(np.int64)
+class ShardedFilter:
+    """Shard/cogroup plumbing shared by the URL-seen filters. A subclass
+    names the candidate columns its kernels read (``KEYS``) and supplies
+    two per-shard kernels over one shard's rows: ``_contains(raw, rows)``
+    → bool array, and ``_insert(raw, rows)`` → the shard's new bytes
+    (``raw`` is None for a shard never written)."""
 
+    KEYS: tuple[str, ...] = ("url_hash",)
 
-class ShardedBloom:
-    def __init__(self, n_shards: int = 64, bits_per_shard: int = 1 << 20, k: int = 5):
+    def __init__(self, n_shards: int):
         self.n_shards = n_shards
-        self.m = bits_per_shard
-        self.k = k
 
     def with_keys(self, df: DataFrame) -> DataFrame:
-        """Add h2 + shard columns (JVM-side; h1 is the existing url_hash)."""
-        return df.withColumn("h2", F.xxhash64("url_hash")).withColumn(
-            "shard", F.pmod(F.col("url_hash"), F.lit(self.n_shards)).cast("int")
-        )
+        return df.withColumn("shard", seen_shard("url_hash", self.n_shards).cast("int"))
 
-    def _bloom_or_empty(self, spark, bloom: DataFrame | None) -> DataFrame:
-        if bloom is None:
-            bloom = spark.createDataFrame([], BLOOM_SCHEMA)
-        return bloom
+    def _table(self, spark: SparkSession, table: DataFrame | None) -> DataFrame:
+        return spark.createDataFrame([], FILTER_SCHEMA) if table is None else table
 
-    def probe(self, cand: DataFrame, bloom: DataFrame | None) -> DataFrame:
+    def probe(self, cand: DataFrame, table: DataFrame | None) -> DataFrame:
         """Mark candidates ``maybe_seen``; rows without the flag are
         guaranteed-new (no false negatives).
 
-        Cogrouped on shard: the shard's bit array crosses the shuffle ONCE
-        per shard, never per candidate row (an equi-join would replicate the
+        Cogrouped on shard: the shard's blob crosses the shuffle ONCE per
+        shard, never per candidate row (an equi-join would replicate the
         128 KB blob onto every row — measured 50× slower at 2.4M URLs)."""
-        m, k = self.m, self.k
+        contains = self._contains
 
         def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             out = left.copy()
-            if len(left) == 0:
-                out["maybe_seen"] = pd.Series([], dtype=bool)
-                return out
-            if len(right) == 0 or right["bits"].iloc[0] is None:
-                out["maybe_seen"] = False
-                return out
-            bits = np.unpackbits(
-                np.frombuffer(right["bits"].iloc[0], dtype=np.uint8)
-            )
-            pos = _positions(
-                left["url_hash"].to_numpy(), left["h2"].to_numpy(), k, m
-            )
-            out["maybe_seen"] = bits[pos].all(axis=1)
+            raw = right["bits"].iloc[0] if len(right) else None
+            if len(left) == 0 or raw is None:
+                out["maybe_seen"] = np.zeros(len(left), dtype=bool)
+            else:
+                out["maybe_seen"] = contains(raw, left)
             return out
 
         cand = self.with_keys(cand) if "shard" not in cand.columns else cand
-        bloom = self._bloom_or_empty(cand.sparkSession, bloom)
         schema = T.StructType(
             list(cand.schema.fields)
             + [T.StructField("maybe_seen", T.BooleanType(), False)]
         )
         return (
             cand.groupBy("shard")
-            .cogroup(bloom.groupBy("shard"))
+            .cogroup(self._table(cand.sparkSession, table).groupBy("shard"))
             .applyInPandas(_probe, schema)
         )
 
-    def insert(self, new: DataFrame, bloom: DataFrame | None) -> DataFrame:
-        """Return the updated bloom table (replace-mode snapshot table).
-        Cogrouped on shard: shards with new URLs get OR-ed bits; shards with
-        no new URLs pass through unchanged (empty left side)."""
-        m, k = self.m, self.k
+    def _mutate(self, ops: DataFrame, table: DataFrame | None, kernel) -> DataFrame:
+        """Return the updated (shard, bits) table (replace-mode snapshot
+        table): shards with ops get ``kernel``'s bytes; shards with none
+        pass through unchanged (empty left side)."""
 
-        def _insert(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        def _apply(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             raw = right["bits"].iloc[0] if len(right) else None
-            if len(left) == 0:
-                return pd.DataFrame({"shard": [int(key[0])], "bits": [raw]})
-            if raw is None:
-                bits = np.zeros(m, dtype=np.uint8)
-            else:
-                bits = np.unpackbits(np.frombuffer(raw, dtype=np.uint8)).copy()
-            pos = _positions(
-                left["url_hash"].to_numpy(), left["h2"].to_numpy(), k, m
-            )
-            bits[pos.ravel()] = 1
-            return pd.DataFrame(
-                {"shard": [int(key[0])], "bits": [np.packbits(bits).tobytes()]}
-            )
+            if len(left):
+                raw = kernel(raw, left)
+            return pd.DataFrame({"shard": [int(key[0])], "bits": [raw]})
 
-        new = self.with_keys(new) if "shard" not in new.columns else new
-        bloom = self._bloom_or_empty(new.sparkSession, bloom)
+        ops = self.with_keys(ops) if "shard" not in ops.columns else ops
         return (
-            new.select("shard", "url_hash", "h2")
+            ops.select("shard", *self.KEYS)
             .groupBy("shard")
-            .cogroup(bloom.groupBy("shard"))
-            .applyInPandas(_insert, BLOOM_SCHEMA)
+            .cogroup(self._table(ops.sparkSession, table).groupBy("shard"))
+            .applyInPandas(_apply, FILTER_SCHEMA)
         )
+
+    def insert(self, new: DataFrame, table: DataFrame | None) -> DataFrame:
+        return self._mutate(new, table, self._insert)
+
+
+class ShardedBloom(ShardedFilter):
+    KEYS = ("url_hash", "h2")
+
+    def __init__(self, n_shards: int = N_SEEN_SHARDS, bits_per_shard: int = 1 << 20, k: int = 5):
+        super().__init__(n_shards)
+        self.m = bits_per_shard
+        self.k = k
+
+    def with_keys(self, df: DataFrame) -> DataFrame:
+        """Add h2 + shard columns (JVM-side; h1 is the existing url_hash)."""
+        return super().with_keys(df.withColumn("h2", F.xxhash64("url_hash")))
+
+    def _pos(self, rows: pd.DataFrame) -> np.ndarray:
+        """(n,) int64 (h1, h2) pairs -> (n, k) bit positions, double hashing."""
+        u1 = rows["url_hash"].to_numpy().astype(np.uint64)
+        u2 = rows["h2"].to_numpy().astype(np.uint64)
+        i = np.arange(self.k, dtype=np.uint64)[None, :]
+        return ((u1[:, None] + i * u2[:, None]) % np.uint64(self.m)).astype(np.int64)
+
+    def _contains(self, raw: bytes, rows: pd.DataFrame) -> np.ndarray:
+        bits = np.unpackbits(np.frombuffer(raw, dtype=np.uint8))
+        return bits[self._pos(rows)].all(axis=1)
+
+    def _insert(self, raw: bytes | None, rows: pd.DataFrame) -> bytes:
+        if raw is None:
+            bits = np.zeros(self.m, dtype=np.uint8)
+        else:
+            bits = np.unpackbits(np.frombuffer(raw, dtype=np.uint8))
+        bits[self._pos(rows).ravel()] = 1
+        return np.packbits(bits).tobytes()
+
+
+class ShardedCuckoo(ShardedFilter):
+    """Distributed sharded cuckoo filter — the deletion-capable URL-seen
+    variant (re-crawl invalidation: a URL scheduled for refresh is DELETEd
+    from the filter so the next wave treats it as new). Each shard is a
+    :class:`CuckooShard` blob in the (shard, bits) snapshot table.
+    """
+
+    def __init__(self, n_shards: int = N_SEEN_SHARDS, n_buckets: int = 1 << 14, slots: int = 4):
+        super().__init__(n_shards)
+        self.n_buckets = n_buckets
+        self.slots = slots
+
+    def _shard(self, raw: bytes | None) -> CuckooShard:
+        if raw is None:
+            return CuckooShard(self.n_buckets, self.slots)
+        return CuckooShard.from_bytes(raw, self.n_buckets, self.slots)
+
+    def _contains(self, raw: bytes, rows: pd.DataFrame) -> np.ndarray:
+        return self._shard(raw).contains_many(rows["url_hash"].to_numpy())
+
+    # cuckoo eviction walks make the TABLE BYTES order-sensitive; both
+    # mutations walk the shard's hashes sorted so the bytes are identical
+    # under any input partitioning
+
+    def _insert(self, raw: bytes | None, rows: pd.DataFrame) -> bytes:
+        shard = self._shard(raw)
+        for h in rows["url_hash"].sort_values():
+            if not shard.insert(int(h)):
+                # the walk dropped a fingerprint it had evicted — most likely
+                # an earlier URL's, which would then probe as definite-new
+                # and be fetched twice; fail the job so nothing commits
+                raise RuntimeError(
+                    f"cuckoo shard {int(rows['shard'].iloc[0])} saturated "
+                    f"({self.n_buckets}x{self.slots} slots): insert of {int(h)} "
+                    "failed after max_kicks; raise n_buckets or n_shards"
+                )
+        return shard.to_bytes()
+
+    def _delete(self, raw: bytes | None, rows: pd.DataFrame) -> bytes:
+        shard = self._shard(raw)
+        for h in rows["url_hash"].sort_values():
+            shard.delete(int(h))
+        return shard.to_bytes()
+
+    def delete(self, gone: DataFrame, table: DataFrame | None) -> DataFrame:
+        return self._mutate(gone, table, self._delete)
 
 
 def dedup_in_batch(cand: DataFrame, order_col: str = "seq_key") -> DataFrame:
@@ -155,11 +216,11 @@ def dedup_in_batch(cand: DataFrame, order_col: str = "seq_key") -> DataFrame:
 def filter_new(
     cand: DataFrame,
     seen: DataFrame | None,
-    bloom_table: DataFrame | None,
-    bloom: ShardedBloom,
+    table: DataFrame | None,
+    filt: ShardedFilter,
 ) -> DataFrame:
-    """Exact new-URL set: bloom prefilter + anti-join residue (layer 2+3)."""
-    probed = bloom.probe(cand, bloom_table)
+    """Exact new-URL set: filter prefilter + anti-join residue (layer 2+3)."""
+    probed = filt.probe(cand, table)
     definite_new = probed.filter(~F.col("maybe_seen"))
     maybe = probed.filter(F.col("maybe_seen"))
     if seen is None:
@@ -171,109 +232,17 @@ def filter_new(
     return definite_new.unionByName(survivors).drop("maybe_seen", "h2", "shard")
 
 
-class ShardedCuckoo:
-    """Distributed sharded cuckoo filter — the deletion-capable URL-seen
-    variant (re-crawl invalidation: a URL scheduled for refresh is DELETEd
-    from the filter so the next wave treats it as new).
-
-    Same cogroup discipline as :class:`ShardedBloom`: shard bytes cross the
-    shuffle once per shard; shard = pmod(url_hash, n_shards) is
-    parallelism-independent. Each shard is a :class:`CuckooShard` blob in a
-    (shard, bits) snapshot table.
-    """
-
-    def __init__(self, n_shards: int = 64, n_buckets: int = 1 << 14, slots: int = 4):
-        self.n_shards = n_shards
-        self.n_buckets = n_buckets
-        self.slots = slots
-
-    def with_keys(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "shard", F.pmod(F.col("url_hash"), F.lit(self.n_shards)).cast("int")
-        )
-
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], BLOOM_SCHEMA)
-
-    def _apply(self, ops: DataFrame, table: DataFrame | None, delete: bool) -> DataFrame:
-        nb, sl = self.n_buckets, self.slots
-
-        def _mutate(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            raw = right["bits"].iloc[0] if len(right) else None
-            if len(left) == 0:
-                return pd.DataFrame({"shard": [int(key[0])], "bits": [raw]})
-            shard = (
-                CuckooShard.from_bytes(raw, nb, sl)
-                if raw is not None
-                else CuckooShard(nb, sl)
-            )
-            # cuckoo eviction walks make the TABLE BYTES order-sensitive;
-            # sort so the bytes are identical under any input partitioning
-            for h in left["url_hash"].sort_values():
-                if delete:
-                    shard.delete(int(h))
-                else:
-                    shard.insert(int(h))
-            return pd.DataFrame(
-                {"shard": [int(key[0])], "bits": [shard.to_bytes()]}
-            )
-
-        ops = self.with_keys(ops) if "shard" not in ops.columns else ops
-        if table is None:
-            table = self._empty(ops.sparkSession)
-        return (
-            ops.select("shard", "url_hash")
-            .groupBy("shard")
-            .cogroup(table.groupBy("shard"))
-            .applyInPandas(_mutate, BLOOM_SCHEMA)
-        )
-
-    def insert(self, new: DataFrame, table: DataFrame | None) -> DataFrame:
-        return self._apply(new, table, delete=False)
-
-    def delete(self, gone: DataFrame, table: DataFrame | None) -> DataFrame:
-        return self._apply(gone, table, delete=True)
-
-    def probe(self, cand: DataFrame, table: DataFrame | None) -> DataFrame:
-        """Adds ``maybe_seen``; like Bloom, no false negatives (an exact
-        anti-join downstream keeps the final set exact)."""
-        nb, sl = self.n_buckets, self.slots
-
-        def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            out = left.copy()
-            if len(left) == 0:
-                out["maybe_seen"] = pd.Series([], dtype=bool)
-                return out
-            raw = right["bits"].iloc[0] if len(right) else None
-            if raw is None:
-                out["maybe_seen"] = False
-                return out
-            shard = CuckooShard.from_bytes(raw, nb, sl)
-            out["maybe_seen"] = [shard.contains(int(h)) for h in left["url_hash"]]
-            return out
-
-        cand = self.with_keys(cand) if "shard" not in cand.columns else cand
-        if table is None:
-            table = self._empty(cand.sparkSession)
-        schema = T.StructType(
-            list(cand.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType(), False)]
-        )
-        return (
-            cand.groupBy("shard")
-            .cogroup(table.groupBy("shard"))
-            .applyInPandas(_probe, schema)
-        )
+_MASK64 = (1 << 64) - 1
 
 
 class CuckooShard:
     """Deterministic cuckoo filter (16-bit fingerprints, 4-way buckets) —
     the deletion-capable fallback the north rule asks for (e.g. evicting
     URLs scheduled for re-crawl). Single-shard numpy engine; sharding and
-    snapshot plumbing reuse the Bloom pattern.
+    snapshot plumbing live in :class:`ShardedFilter`.
 
     Determinism: bucket choice and eviction walk derive only from the
-    fingerprint and a fixed LCG — no RNG state, so shard bytes are
+    fingerprint and a fixed 64-bit LCG — no RNG state, so shard bytes are
     reproducible across runs/cluster sizes.
     """
 
@@ -307,23 +276,35 @@ class CuckooShard:
         # deterministic eviction walk
         i = i1 if (fp & 1) == 0 else i2
         cur = fp
-        state = np.uint64(h & 0xFFFFFFFFFFFFFFFF)
+        state = h & _MASK64
         for _ in range(self.max_kicks):
-            state = state * np.uint64(6364136223846793005) + np.uint64(1442695040888963407)
-            slot = int(state >> np.uint64(62)) % self.slots
+            state = (state * 6364136223846793005 + 1442695040888963407) & _MASK64
+            slot = (state >> 62) % self.slots
             cur, self.table[i, slot] = int(self.table[i, slot]), cur
             i = self._i2(i, cur)
             empty = np.where(self.table[i] == 0)[0]
             if len(empty):
                 self.table[i, empty[0]] = cur
                 return True
-        return False  # full — caller must grow/rebuild the shard
+        return False  # full — the fingerprint in hand was dropped
 
     def contains(self, h: int) -> bool:
         fp = self._fp(h)
         i1 = self._i1(h)
         i2 = self._i2(i1, fp)
         return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
+
+    def contains_many(self, h: np.ndarray) -> np.ndarray:
+        """Vectorized :meth:`contains` over an int64 hash array (same
+        fingerprint and bucket arithmetic, as one numpy gather)."""
+        h = np.asarray(h, dtype=np.int64)
+        fp = (h >> 16) & 0xFFFF
+        fp[fp == 0] = 1
+        mask = self.n_buckets - 1
+        i1 = h & mask
+        i2 = (i1 ^ (fp * 0x5BD1E995)) & mask
+        fp = fp[:, None]
+        return (self.table[i1] == fp).any(axis=1) | (self.table[i2] == fp).any(axis=1)
 
     def delete(self, h: int) -> bool:
         fp = self._fp(h)

@@ -30,6 +30,7 @@ from price_crawler_spark.frontier.fetch import (
 )
 from price_crawler_spark.frontier.seen import (
     ShardedBloom,
+    ShardedCuckoo,
     dedup_in_batch,
     filter_new,
 )
@@ -54,6 +55,10 @@ FRONTIER_COLS = [
     "seq_key",
 ]
 
+# the probabilistic URL-seen prefilter by name; 'cuckoo' is the
+# deletion-capable variant (north rule fallback) that invalidate() needs
+SEEN_FILTERS = {"bloom": ShardedBloom, "cuckoo": ShardedCuckoo}
+
 
 class CrawlRun:
     def __init__(
@@ -63,7 +68,6 @@ class CrawlRun:
         queries: list[str],
         wave_seconds: float = 60.0,
         max_retries: int = 2,
-        bloom: ShardedBloom | None = None,
         robots: list[dict] | None = None,
         mega_hosts: list[str] | None = None,
         seen_filter: str = "bloom",
@@ -75,18 +79,13 @@ class CrawlRun:
         self.queries = sorted(queries)
         self.wave_seconds = wave_seconds
         self.max_retries = max_retries
-        # the probabilistic URL-seen prefilter; the snapshot table is named
-        # "bloom" for both variants. seen_filter='cuckoo' swaps in the
-        # deletion-capable ShardedCuckoo (north rule fallback) — required
-        # for invalidate(); an explicit `bloom` object wins over the name.
-        if bloom is not None:
-            self.bloom = bloom
-        elif seen_filter == "cuckoo":
-            from price_crawler_spark.frontier.seen import ShardedCuckoo
-
-            self.bloom = ShardedCuckoo()
-        else:
-            self.bloom = ShardedBloom()
+        if seen_filter not in SEEN_FILTERS:
+            raise ValueError(
+                f"seen_filter must be one of {sorted(SEEN_FILTERS)}, "
+                f"got {seen_filter!r}"
+            )
+        # the snapshot table is named "bloom" for both variants
+        self.bloom = SEEN_FILTERS[seen_filter]()
         # harness knob: hosts whose SYNTHETIC fetches always fail — used to
         # audit pending-table drain under a persistently-dead host (a URL
         # must exit to frontier_log after max_retries, never cycle forever)
@@ -346,8 +345,6 @@ class CrawlRun:
         this parquet shim rewrites the two tables instead. Returns the
         number of rows re-enqueued.
         """
-        from price_crawler_spark.frontier.seen import ShardedCuckoo
-
         if not isinstance(self.bloom, ShardedCuckoo):
             raise ValueError(
                 "invalidate() requires seen_filter='cuckoo' — Bloom bits "

@@ -1,22 +1,22 @@
 """Partitioning strategy for the 100 TB deployment (SURVEY.md §2.10, §7).
 
-This module encodes the layout decisions as code (used by the wave loop and
-the storage shim) and documents WHY each holds at 1000 executors:
+This module holds one definition per layout decision and documents WHY
+each holds at 1000 executors:
 
-  * frontier:   partition by (wave, pmod(url_hash, N_HOST_BUCKETS)).
-                url_hash is uniform (xxhash64) → no planning skew; wave
-                pruning means a resume touches only the live wave.
-  * seen:       Bloom shards keyed by pmod(url_hash, N_SEEN_SHARDS) with
+  * seen:       URL-seen filter shards (``frontier/seen.py``) and the
+                streaming seen state (``streaming/seen_state.py``) are keyed
+                by ``seen_shard`` = pmod(url_hash, N_SEEN_SHARDS) with
                 N_SEEN_SHARDS fixed INDEPENDENT of parallelism — shard
                 membership must not change when the cluster is resized, or
                 the "exact URL-seen set" guarantee breaks (SURVEY §7.3.5).
-  * documents:  partition by ingest wave; span extraction is a pure map, so
-                downstream extraction never shuffles documents at all.
   * mega-host skew: politeness quotas are computed per TRUE host first
                 (window over host), THEN the fetch shuffle is salted with
-                pmod(url_hash, salt(host)) — salting after quota keeps
+                ``host_salt`` = pmod(url_hash, buckets) on mega hosts only
+                (``frontier/politeness.py``) — salting after quota keeps
                 crawl-delay per-host-correct while splitting the mega host
                 across executors (C6 + §7.3.6).
+  * scans:      ``ensure_scan_parallelism`` widens a narrow file scan before
+                the dedup/ANN pipelines' heavy pre-shuffle map work.
 """
 
 from __future__ import annotations
@@ -26,29 +26,18 @@ from pyspark.sql import functions as F
 
 # fixed, parallelism-independent (SURVEY §7.3.5)
 N_SEEN_SHARDS = 64
-N_HOST_BUCKETS = 256
 
 
-def seen_shard(url_hash: Column | str) -> Column:
+def seen_shard(url_hash: Column | str, n: int = N_SEEN_SHARDS) -> Column:
     c = F.col(url_hash) if isinstance(url_hash, str) else url_hash
-    return F.pmod(c, F.lit(N_SEEN_SHARDS))
+    return F.pmod(c, F.lit(n))
 
 
-def host_bucket(url_hash: Column | str) -> Column:
-    c = F.col(url_hash) if isinstance(url_hash, str) else url_hash
-    return F.pmod(c, F.lit(N_HOST_BUCKETS))
-
-
-def salted_fetch_key(host: Column | str, url_hash: Column | str,
-                     mega_hosts: list[str], buckets: int = 16) -> Column:
-    """Fetch-shuffle key: host, salted only for mega hosts. Applied AFTER
-    per-host quota ranking so politeness math never sees the salt."""
-    h = F.col(host) if isinstance(host, str) else host
-    u = F.col(url_hash) if isinstance(url_hash, str) else url_hash
-    salt = F.when(
-        h.isin(mega_hosts), F.pmod(u, F.lit(buckets))
+def host_salt(mega_hosts: list[str], buckets: int) -> Column:
+    """Fetch-group salt: pmod(url_hash, buckets) on mega hosts, 0 elsewhere."""
+    return F.when(
+        F.col("host").isin(mega_hosts), F.pmod(F.col("url_hash"), F.lit(buckets))
     ).otherwise(F.lit(0))
-    return F.concat(h, F.lit("#"), salt.cast("string"))
 
 
 def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
@@ -115,9 +104,3 @@ def _size_to_bytes(v: str) -> int:
     suffix = s[len(num):].rstrip("b") or "b"
     return int(float(num or "0") * units.get(suffix, 1))
 
-
-def repartition_frontier(frontier: DataFrame) -> DataFrame:
-    """Shuffle the frontier to its canonical layout before a wave: all URLs
-    of a host bucket co-located (politeness sequencing happens per host
-    inside a bucket), buckets spread uniformly."""
-    return frontier.repartition(host_bucket("url_hash"))

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from price_crawler_spark.frontier.seen import (
     CuckooShard,
     ShardedBloom,
+    ShardedCuckoo,
     dedup_in_batch,
     filter_new,
 )
@@ -235,6 +236,51 @@ def test_cuckoo_serialization_roundtrip():
     assert all(c2.contains(h * 7919) for h in range(1, 300))
 
 
+INT64_EDGES = [0, 1, -1, 65536, -65536, 65535, -65535, (1 << 63) - 1, -(1 << 63)]
+
+
+@pytest.mark.parametrize("n_buckets", [1 << 8, 1 << 10, 1 << 14])
+def test_cuckoo_contains_many_matches_contains(n_buckets):
+    """The vectorized probe answers exactly like the per-hash one — hits,
+    misses and fingerprint collisions alike — on 50k random hashes plus
+    the sign and fingerprint edges; every other hash is inserted, up to
+    ~0.9 load."""
+    import numpy as np
+
+    rng = np.random.default_rng(n_buckets)
+    hs = np.concatenate([
+        np.array(INT64_EDGES, dtype=np.int64),
+        rng.integers(-(1 << 63), (1 << 63) - 1, size=50_000, dtype=np.int64),
+    ])
+    c = CuckooShard(n_buckets=n_buckets)
+    for h in hs[::2][: int(0.9 * n_buckets * c.slots)]:
+        c.insert(int(h))
+    got = c.contains_many(hs)
+    assert got.dtype == bool and got.shape == hs.shape
+    assert got.tolist() == [c.contains(int(h)) for h in hs]
+    assert got.any() and not got.all()
+
+
+def test_cuckoo_eviction_walk_bytes_pinned():
+    """A 0.88-load shard (most inserts past the first few hundred take the
+    eviction walk) keeps its exact bytes, and the walk's 64-bit LCG no
+    longer warns about integer overflow."""
+    import hashlib
+    import warnings
+
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    hs = rng.integers(-(1 << 63), (1 << 63) - 1, size=900, dtype=np.int64)
+    c = CuckooShard(n_buckets=1 << 8)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert all(c.insert(int(h)) for h in hs)
+    assert hashlib.sha256(c.to_bytes()).hexdigest() == (
+        "2dce1dec6f59677a292d8332cccc8d86532973ec456f2d75feae7b9e757ae09a"
+    )
+
+
 # ---- kill/resume -------------------------------------------------------------
 
 def test_resume_from_checkpoint(spark, tmp_path_factory, oracle):
@@ -398,8 +444,6 @@ def test_sharded_cuckoo_insert_delete_probe(spark):
     deleted hashes drop out (modulo fp collisions, only FEWER hits allowed,
     never false negatives on the kept half); deterministic across
     partitionings."""
-    from price_crawler_spark.frontier.seen import ShardedCuckoo
-
     ck = ShardedCuckoo(n_shards=8, n_buckets=1 << 10)
     df = spark.range(0, 400).select(F.xxhash64("id").alias("url_hash"))
     table = ck.insert(df, None)
@@ -422,6 +466,57 @@ def test_sharded_cuckoo_insert_delete_probe(spark):
         for r in ck.insert(df.repartition(13), None).collect()
     )
     assert t_a == t_b
+
+
+def _shard_sha256(table):
+    import hashlib
+
+    return {r.shard: hashlib.sha256(bytes(r.bits)).hexdigest() for r in table.collect()}
+
+
+def test_bloom_insert_bytes_pinned(spark):
+    """Every Bloom shard's bytes equal the ones the pre-refactor filter
+    wrote (same hash family, same shard key, same bit packing)."""
+    bloom = ShardedBloom(n_shards=8, bits_per_shard=1 << 14)
+    df = spark.range(0, 500).select(F.xxhash64("id").alias("url_hash"))
+    assert _shard_sha256(bloom.insert(df, None)) == {
+        0: "89dc53bb46a228cb37c6ef265c9d5e7468201a42d0dc3f0e66397481e1065864",
+        1: "7ee96e94eda3c9d3ad8183991458312cb159792c70d0b9554807333f5759f644",
+        2: "64994b1500ac6aa869a4866fb102d92fc1d5f781e9595bc4f71525c16d420fed",
+        3: "1168cd771f53fc0efeaf421302b28b31b8c3f7e7a44f29bb6742278d891be22a",
+        4: "8c34ff26f566e062bf54dc2599c469b337241b8928202dec16d7d1a086e76958",
+        5: "503c58ba85ecf5debf255c839e6c585144a5b66bb49258736abb87f129e2631c",
+        6: "ab9d5ad8cef62fd97937d88af037e05fb2bedc512e24ac93a6af6c80129768a1",
+        7: "74ad202f5ce12f2b2d827cd46d618bef43ac5a7bd9d260c3b873044be95c462f",
+    }
+
+
+def test_cuckoo_insert_delete_bytes_pinned(spark):
+    """Every cuckoo shard's bytes after insert-then-delete equal the ones
+    the pre-refactor filter wrote."""
+    ck = ShardedCuckoo(n_shards=8, n_buckets=1 << 10)
+    df = spark.range(0, 400).select(F.xxhash64("id").alias("url_hash"))
+    gone = spark.range(0, 200).select(F.xxhash64("id").alias("url_hash"))
+    assert _shard_sha256(ck.delete(gone, ck.insert(df, None))) == {
+        0: "87964f7cb3782aa1d180cca2e0e7e734e68446f475710a41cf8b5c8694308bad",
+        1: "d98d7d81f69315547a6ea08a4fead36591f6e4006080e950298a9be639082a1f",
+        2: "21d47435df08948ada2c827d74b9b7019633509677b6045dadfb9eb080f36889",
+        3: "cf9306cd0c278496f3fa872009c619828aabf15cd55d53bbf325b2c41df1c78d",
+        4: "d29f7382e32813e91b05e2dfbf9b372fd977b7d4eb4512bc0da2dc57e05815f7",
+        5: "4e5ad8796ecf4423bb326ad2f9dad880475a2a9729d7043764587e2fa3f81c9a",
+        6: "69f8a5ee4f0c710846dc7a3500f4ad4df17de12f97388e40487d19dd2e4d0c0d",
+        7: "efd1e99998d3950154abd8cdf5e1cfc662624e8c6dbdff38427c63aaea23d598",
+    }
+
+
+def test_cuckoo_saturation_raises(spark):
+    """A shard that cannot hold an insert fails the job instead of dropping
+    the fingerprint its eviction walk holds (an earlier URL would then
+    probe as definite-new and be fetched twice)."""
+    ck = ShardedCuckoo(n_shards=1, n_buckets=4)  # 16 slots
+    df = spark.range(0, 64).select(F.xxhash64("id").alias("url_hash"))
+    with pytest.raises(Exception, match="saturated"):
+        ck.insert(df, None).collect()
 
 
 def test_live_transport_seam_mocked_session():
@@ -574,6 +669,11 @@ def test_bloom_run_rejects_invalidate(spark, tmp_path_factory):
     run.run(max_waves=1)
     with pytest.raises(ValueError, match="cuckoo"):
         run.invalidate(["https://x.example.com/1"])
+
+
+def test_unknown_seen_filter_rejected(spark, tmp_path):
+    with pytest.raises(ValueError, match=r"\['bloom', 'cuckoo'\]"):
+        CrawlRun(spark, str(tmp_path), QUERIES, seen_filter="cukoo")
 
 
 def test_pending_drains_under_persistent_failure(spark, tmp_path_factory):

@@ -14,9 +14,9 @@ from price_crawler_spark.plans import (
     assert_wholestage_codegen,
     explain_str,
 )
+from price_crawler_spark.frontier.politeness import with_host_salt
 from price_crawler_spark.plans.partitioning import (
     N_SEEN_SHARDS,
-    salted_fetch_key,
     seen_shard,
 )
 
@@ -151,7 +151,8 @@ def test_salted_fetch_key_only_splits_mega_hosts(spark):
     df = spark.createDataFrame(
         [("big.com", i) for i in range(100)] + [("small.com", i) for i in range(100)],
         ["host", "h"],
-    ).select("host", salted_fetch_key("host", F.col("h").cast("long"), ["big.com"], 4).alias("k"))
+    ).withColumn("url_hash", F.col("h").cast("long"))
+    df = with_host_salt(df, ["big.com"], 4).select("host", F.col("host_salt").alias("k"))
     keys = df.groupBy("host").agg(F.countDistinct("k").alias("n")).collect()
     by_host = {r.host: r.n for r in keys}
     assert by_host["small.com"] == 1

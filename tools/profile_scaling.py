@@ -4,12 +4,13 @@ Runs the identical frontier canonicalize+dedup+schedule job (the --scaling
 job from bench.py) with the Spark event log on, then aggregates per-stage
 task metrics: wall time (stage submit -> completion), summed executor run
 time, GC, shuffle bytes, python-UDF time. The point is to ATTRIBUTE the
-non-scaling seconds: a stage whose wall time doesn't shrink 8->32 while its
-summed run time stays flat is a granularity/straggler problem; one whose
-summed run time GROWS at 32 cores is a contention (memory-bandwidth / GC)
-problem.
+non-scaling seconds: a stage whose wall time doesn't shrink from the low
+to the high core count while its summed run time stays flat is a
+granularity/straggler problem; one whose summed run time GROWS at the high
+count is a contention (memory-bandwidth / GC) problem.
 
-Usage: PYTHONPATH=/root/repo python tools/profile_scaling.py [cpus ...]
+Usage: PYTHONPATH=. python tools/profile_scaling.py [cpus ...]
+(defaults to session.DEFAULT_CPUS and a quarter of it, at least 1)
 """
 
 from __future__ import annotations
@@ -198,7 +199,9 @@ def aggregate_event_log(evdir: str, t_min: float) -> list[dict]:
 
 
 if __name__ == "__main__":
-    cpus_list = [int(a) for a in sys.argv[1:]] or [32, 8]
+    from price_crawler_spark.session import DEFAULT_CPUS
+
+    cpus_list = [int(a) for a in sys.argv[1:]] or [DEFAULT_CPUS, max(1, DEFAULT_CPUS // 4)]
     for c in cpus_list:
         r = run_once(c)
         print(json.dumps(r, indent=1))

@@ -13,7 +13,8 @@ view (summed run/GC/shuffle), but the commit's concurrent table writes all
 surface as anonymous CompletableFuture callsites, so stage NAMES cannot
 attribute phases — that's why the driver-step timers exist.
 
-Usage: PYTHONPATH=/root/repo python tools/profile_wave.py [cpus] [queries]
+Usage: PYTHONPATH=. python tools/profile_wave.py [cpus] [queries]
+(cpus defaults to session.DEFAULT_CPUS: SPARK_GRAFT_CPUS or the core count)
 """
 
 from __future__ import annotations
@@ -30,8 +31,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from profile_scaling import aggregate_event_log  # noqa: E402
 
+from price_crawler_spark.session import DEFAULT_CPUS  # noqa: E402
+
+
 def main() -> None:
-    cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 32
+    cpus = int(sys.argv[1]) if len(sys.argv) > 1 else DEFAULT_CPUS
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else int(
         os.environ.get("SPARK_GRAFT_ENGINE_QUERIES", "800")
     )
