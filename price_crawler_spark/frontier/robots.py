@@ -16,6 +16,7 @@ the broadcast dim joined against the frontier, which is where scale lives.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from price_crawler_spark.schemas import ROBOTS_SCHEMA
@@ -76,6 +77,16 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
     }
 
 
+def robots_table(spark: SparkSession, rows: list) -> DataFrame:
+    """Robots rows (dicts or ``ROBOTS_SCHEMA``-ordered tuples) → a frame that
+    plans as a JVM ``LocalRelation``. A frame built from the Python list
+    plans as an RDD that Python workers unpickle again on every broadcast —
+    a Spark job per use, several times per wave."""
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=ROBOTS_SCHEMA.names), ROBOTS_SCHEMA
+    )
+
+
 def robots_dim(
     spark: SparkSession, fetched: dict[str, str], agent: str = "*"
 ) -> DataFrame:
@@ -84,4 +95,4 @@ def robots_dim(
     for host, body in sorted(fetched.items()):
         r = parse_robots_txt(body, agent)
         rows.append((host, r["allow"], r["deny"], r["crawl_delay"]))
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return robots_table(spark, rows)

@@ -17,10 +17,13 @@ Layered design:
          fingerprints that also supports DELETE (re-crawl invalidation).
      n_shards is independent of parallelism, so false positives and shard
      bytes are identical across runs and cluster sizes (SURVEY §7.3 risk 5).
-  3. exact anti-join — only the maybe-seen residue joins against the seen
-     table (left_anti on url_hash). The FINAL seen set is therefore exact;
-     the prefilter only prunes shuffle volume (at 10^10 URLs the residue is
-     ~fp-rate of the batch, so the anti-join input shrinks by ~100×).
+  3. exact anti-join — one left_anti join over the single probe output,
+     on ``url_hash = seen.url_hash AND maybe_seen``: definite-new rows can
+     never match the condition, so only the maybe-seen residue is checked
+     against the seen table. The FINAL seen set is therefore exact, and the
+     probe cogroup runs once (a union of a definite-new branch and a
+     residue branch would run it once per branch). Every candidate enters
+     the join — O(wave) rows, beside the seen table's O(corpus) side.
 
 The blobs travel as parquet BINARY rows (shard, bits) co-partitioned with
 candidates on ``shard``: probe and insert/delete are ``applyInPandas``
@@ -219,17 +222,17 @@ def filter_new(
     table: DataFrame | None,
     filt: ShardedFilter,
 ) -> DataFrame:
-    """Exact new-URL set: filter prefilter + anti-join residue (layer 2+3)."""
+    """Exact new-URL set (layers 2+3): one probe pass, then one left-anti
+    join against ``seen`` that only a ``maybe_seen`` row can match."""
     probed = filt.probe(cand, table)
-    definite_new = probed.filter(~F.col("maybe_seen"))
-    maybe = probed.filter(F.col("maybe_seen"))
-    if seen is None:
-        survivors = maybe
-    else:
-        survivors = maybe.join(
-            seen.select("url_hash"), "url_hash", "left_anti"
+    if seen is not None:
+        old = seen.select(F.col("url_hash").alias("_seen_hash"))
+        probed = probed.join(
+            old,
+            (F.col("url_hash") == F.col("_seen_hash")) & F.col("maybe_seen"),
+            "left_anti",
         )
-    return definite_new.unionByName(survivors).drop("maybe_seen", "h2", "shard")
+    return probed.drop("maybe_seen", "h2", "shard")
 
 
 _MASK64 = (1 << 64) - 1

@@ -28,6 +28,7 @@ from price_crawler_spark.frontier.fetch import (
     fetch_scheduled,
     links_from_fetched,
 )
+from price_crawler_spark.frontier.robots import robots_table
 from price_crawler_spark.frontier.seen import (
     ShardedBloom,
     ShardedCuckoo,
@@ -99,7 +100,7 @@ class CrawlRun:
         # task count, not bucket count, is what removes the straggler.
         # Goldens keep the default.
         self.salt_buckets = salt_buckets
-        self.robots = spark.createDataFrame(robots or robots_rows())
+        self.robots = robots_table(spark, robots or robots_rows())
         self.mega_hosts = mega_hosts or ["www.coolpc.com.tw"]
         # driver-step wall seconds, accumulated across waves. The wave loop
         # has exactly four blocking driver actions (everything between them
@@ -107,14 +108,20 @@ class CrawlRun:
         # pending_probe | fetch (politeness+schedule+fetch UDF, materialized
         # by fetched.count) | children (canonicalize+bloom+seen, by
         # new_children.count) | commit (the concurrent snapshot writes).
-        # Used by tools/profile_wave.py; event-log stage names can't
-        # attribute these (the commit's concurrent writes all surface as
-        # anonymous CompletableFuture callsites).
+        # Every Spark job a phase submits also carries the job description
+        # "wave:<phase>" (the commit's writes "commit:<table>"), which is
+        # how tools/profile_wave.py groups event-log stages.
         self.phase_seconds: dict[str, float] = {}
 
     def _phase(self, name: str, t0: float) -> None:
         self.phase_seconds[name] = self.phase_seconds.get(name, 0.0) + (
             time.time() - t0
+        )
+
+    def _describe(self, phase: str | None) -> None:
+        """Tag the Spark jobs this thread submits from here on."""
+        self.spark.sparkContext.setJobDescription(
+            None if phase is None else f"wave:{phase}"
         )
 
     # -- state ---------------------------------------------------------------
@@ -123,7 +130,11 @@ class CrawlRun:
         if self.store.current() is not None:
             return
         t0 = time.time()
-        self._init_inner()
+        self._describe("init_seed_commit")
+        try:
+            self._init_inner()
+        finally:
+            self._describe(None)
         self._phase("init_seed_commit", t0)
 
     def _init_inner(self) -> None:
@@ -134,17 +145,19 @@ class CrawlRun:
         # appears once per query in the raw seed list but must enter the
         # frontier exactly once (reference: URL-seen checked at enqueue).
         frontier = dedup_in_batch(frontier).persist()
-        # materialize once: the commit's three concurrent writes would each
-        # re-run the canonicalizer's Python UDF over a cold cache
-        frontier.count()
-        seen = frontier.select("url_hash").distinct()
-        bloom_table = self.bloom.insert(frontier.select("url_hash"), None)
-        self.store.commit(
-            tables_replace={"pending": frontier, "bloom": bloom_table},
-            tables_append={"seen": seen},
-            meta={"next_wave": 0, "queries": self.queries},
-        )
-        frontier.unpersist()
+        try:
+            # materialize once: the commit's three concurrent writes would
+            # each re-run the canonicalizer's Python UDF over a cold cache
+            frontier.count()
+            seen = frontier.select("url_hash").distinct()
+            bloom_table = self.bloom.insert(frontier.select("url_hash"), None)
+            self.store.commit(
+                tables_replace={"pending": frontier, "bloom": bloom_table},
+                tables_append={"seen": seen},
+                meta={"next_wave": 0, "queries": self.queries},
+            )
+        finally:
+            frontier.unpersist()
 
     def next_wave(self) -> int:
         return int(self.store.latest_meta().get("next_wave", 0))
@@ -178,7 +191,20 @@ class CrawlRun:
     def run_wave(self) -> bool:
         """Execute one wave; returns False when the frontier is drained."""
         self._init_if_needed()
+        # every frame the wave persists, released even when the wave fails —
+        # a commit error would otherwise leave them cached until the Spark
+        # application ends
+        held: list[DataFrame] = []
+        try:
+            return self._wave(held)
+        finally:
+            for df in held:
+                df.unpersist()
+            self._describe(None)
+
+    def _wave(self, held: list[DataFrame]) -> bool:
         wave = self.next_wave()
+        self._describe("pending_probe")
         # the pending table IS the live frontier — no full-table status
         # filter needed (terminal rows live in the append-only log)
         pending = self.store.read(self.spark, "pending")
@@ -192,20 +218,28 @@ class CrawlRun:
         if n_pending == 0:
             return False
 
+        self._describe("fetch")
         sched, deferred, blocked = politeness.schedule_wave(
             pending, self.robots, self.wave_seconds,
             mega_hosts=self.mega_hosts, salt_buckets=self.salt_buckets,
         )
-        sched = politeness.with_host_salt(
-            sched, self.mega_hosts, buckets=self.salt_buckets
-        )
+        # The scheduled set is computed once: the fetch below materializes
+        # this cache, and the commit's pending write reads it back through
+        # ``deferred`` (allowed rows anti-joined with the scheduled ones)
+        # instead of re-running the scan and both rank windows.
+        sched = sched.persist()
+        held.append(sched)
 
         # persist AND materialize: the commit's five table writes run
         # concurrently, and concurrent jobs hitting a cold cache each
         # recompute the partition — for the fetch UDF (the wave's most
         # expensive stage) that multiplied the cost by the number of
         # consumers until this count().
-        fetched = fetch_scheduled(sched, fail_hosts=self.fail_hosts).persist()
+        salted = politeness.with_host_salt(
+            sched, self.mega_hosts, buckets=self.salt_buckets
+        )
+        fetched = fetch_scheduled(salted, fail_hosts=self.fail_hosts).persist()
+        held.append(fetched)
         t0 = time.time()
         fetched.count()
         self._phase("fetch", t0)
@@ -232,12 +266,13 @@ class CrawlRun:
             .select(*FRONTIER_COLS)
         )
         children = dedup_in_batch(children)
+        self._describe("children_seen")
         seen = self.store.read(self.spark, "seen")
         bloom_table = self.store.read(self.spark, "bloom")
         # Persist + materialize ONCE: three of the commit's concurrent table
         # writes (pending replace, seen append, bloom replace) consume
         # new_children, and without a persist each would recompute the whole
-        # child pipeline — Arrow canonicalize + Bloom-probe cogroup + exact
+        # child pipeline — Arrow canonicalize + filter-probe cogroup + exact
         # anti-join — tripling commit cost (measured: the commit dominated
         # wave wall time and scaled NEGATIVELY with cores before this).
         new_children = (
@@ -245,6 +280,7 @@ class CrawlRun:
             .select(*FRONTIER_COLS)
             .persist()
         )
+        held.append(new_children)
         t0 = time.time()
         new_children.count()
         self._phase("children_seen", t0)
@@ -300,6 +336,7 @@ class CrawlRun:
 
         new_bloom = self.bloom.insert(new_children.select("url_hash"), bloom_table)
 
+        self._describe("commit")
         t0 = time.time()
         self.store.commit(
             tables_replace={"pending": new_pending, "bloom": new_bloom},
@@ -312,8 +349,6 @@ class CrawlRun:
             meta={"next_wave": wave + 1, "queries": self.queries},
         )
         self._phase("commit", t0)
-        fetched.unpersist()
-        new_children.unpersist()
         return True
 
     def run(self, max_waves: int = 10) -> int:

@@ -77,7 +77,10 @@ class SnapshotStore:
             writes.append((name, f"data/{name}/{snap_id}_{token}", df, False))
 
         def _write(job):
-            _name, rel, df, _replace = job
+            name, rel, df, _replace = job
+            # job descriptions are thread-local: tag this writer thread's
+            # jobs with the table it writes
+            df.sparkSession.sparkContext.setJobDescription(f"commit:{name}")
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
 
         if writes:

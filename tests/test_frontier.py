@@ -187,22 +187,34 @@ def test_bloom_no_false_negatives(spark):
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_filter_new_is_exact(spark):
-    """filter_new == exact set difference, regardless of Bloom fp-rate
-    (tiny bloom forces false positives; anti-join must rescue them)."""
-    bloom = ShardedBloom(n_shards=4, bits_per_shard=1 << 8)  # deliberately tiny
+@pytest.mark.parametrize(
+    "filt, seen_none",
+    [
+        # deliberately tiny tables: false positives the anti-join must rescue
+        (ShardedBloom(n_shards=4, bits_per_shard=1 << 8), False),
+        (ShardedCuckoo(n_shards=4, n_buckets=1 << 5), False),
+        (ShardedBloom(n_shards=4, bits_per_shard=1 << 8), True),
+        (ShardedCuckoo(n_shards=4, n_buckets=1 << 5), True),
+    ],
+    ids=["bloom", "cuckoo", "bloom-seen_none", "cuckoo-seen_none"],
+)
+def test_filter_new_is_exact(spark, filt, seen_none):
+    """filter_new == exact set difference, regardless of the filter's
+    fp-rate; with no seen table the filter alone drops nothing."""
     old = spark.range(0, 300).select(F.xxhash64("id").alias("url_hash"))
-    table = bloom.insert(old, None)
+    table = filt.insert(old, None)
     cand = spark.range(200, 600).select(
         F.xxhash64("id").alias("url_hash"), F.lpad(F.hex("id"), 8, "0").alias("seq_key")
     )
-    new = filter_new(cand, old, table, bloom)
-    got = {r[0] for r in new.select("url_hash").collect()}
+    new = filter_new(cand, None if seen_none else old, table, filt)
+    got = [r[0] for r in new.select("url_hash").collect()]
     expected = {
         r[0]
-        for r in spark.range(300, 600).select(F.xxhash64("id")).collect()
+        for r in spark.range(200 if seen_none else 300, 600)
+        .select(F.xxhash64("id")).collect()
     }
-    assert got == expected
+    assert len(got) == len(expected)
+    assert set(got) == expected
 
 
 def test_dedup_in_batch_first_wins(spark):
@@ -350,6 +362,25 @@ def test_crash_mid_commit_is_invisible(spark, tmp_path, oracle, monkeypatch):
     assert got == oracle["fetch_order"]
     docs = run3.documents()
     assert docs.count() == docs.select("doc_id").distinct().count()
+
+
+def test_failed_wave_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A wave whose commit raises (a write error, a saturated cuckoo shard)
+    must not leave its persisted frames cached after it returns."""
+    import price_crawler_spark.sources.store as store_mod
+
+    run = CrawlRun(spark, str(tmp_path), QUERIES, wave_seconds=WAVE_SECONDS)
+    run._init_if_needed()  # the seed commit must succeed
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+
+    def failing_commit(self, *args, **kwargs):
+        raise OSError("simulated commit failure")
+
+    monkeypatch.setattr(store_mod.SnapshotStore, "commit", failing_commit)
+    with pytest.raises(OSError):
+        run.run_wave()
+    assert persisted().size() == before
 
 
 def test_robots_txt_parser(spark):

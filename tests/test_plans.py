@@ -207,3 +207,75 @@ def test_scan_guard_counts_unstattable_file_as_full_bin(spark, tmp_path, monkeyp
 
     monkeypatch.setattr(os.path, "getsize", unstattable)
     assert ensure_scan_parallelism(df) is df
+
+
+# ---- each wave input evaluated once ------------------------------------------
+
+def _nodes_outside_cache(df) -> list[str]:
+    """Node names of ``df``'s optimized logical plan with cached frames
+    substituted. An InMemoryRelation is a leaf, so the walk never enters
+    the plan a cache was built from."""
+    out, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node.nodeName())
+        children = node.children()
+        stack += [children.apply(i) for i in range(children.size())]
+    return out
+
+
+def test_robots_tables_are_local_relations(spark, tmp_path):
+    """The robots dimension plans as a JVM LocalRelation: a frame built from
+    a Python list plans as an RDD that Python workers unpickle again on
+    every broadcast of it."""
+    from price_crawler_spark.frontier.robots import robots_dim
+    from price_crawler_spark.frontier.wave import CrawlRun
+
+    run = CrawlRun(spark, str(tmp_path), ["RTX 4090"])
+    dim = robots_dim(spark, {"shop.example.com": "User-agent: *\nDisallow: /x\n"})
+    for df in (run.robots, dim):
+        assert _nodes_outside_cache(df) == ["LocalRelation"]
+
+
+def test_filter_new_probes_once(spark, tmp_path):
+    """filter_new runs the filter-probe cogroup once and needs no union:
+    the maybe-seen residue is checked by one conditional anti-join."""
+    from price_crawler_spark.frontier.seen import ShardedBloom, filter_new
+
+    bloom = ShardedBloom(n_shards=4, bits_per_shard=1 << 8)
+    old = spark.range(0, 300).select(F.xxhash64("id").alias("url_hash"))
+    # the filter table read back from storage, as a wave reads it
+    bloom.insert(old, None).write.parquet(str(tmp_path / "filter"))
+    table = spark.read.parquet(str(tmp_path / "filter"))
+    cand = spark.range(200, 600).select(
+        F.xxhash64("id").alias("url_hash"), F.lpad(F.hex("id"), 8, "0").alias("seq_key")
+    )
+    new = filter_new(cand, old, table, bloom)
+    assert new.count() == 300
+    new.collect()  # finalizes the adaptive plan of this query execution
+    plan = new._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapCoGroupsInPandas") == 1, final
+    assert "Union" not in final, final
+
+
+def test_wave_commit_reuses_the_schedule(spark, tmp_path, monkeypatch):
+    """The pending table a wave commits reads the scheduled set from the
+    wave's cache: no rank Window is left to re-run outside a cached
+    relation."""
+    import price_crawler_spark.sources.store as store_mod
+    from price_crawler_spark.frontier.wave import CrawlRun
+
+    real_commit = store_mod.SnapshotStore.commit
+    pending_plans = []
+
+    def recording_commit(self, tables_replace=None, **kwargs):
+        pending_plans.append(_nodes_outside_cache(tables_replace["pending"]))
+        return real_commit(self, tables_replace=tables_replace, **kwargs)
+
+    monkeypatch.setattr(store_mod.SnapshotStore, "commit", recording_commit)
+    run = CrawlRun(spark, str(tmp_path), ["RTX 4090"], wave_seconds=10.0)
+    assert run.run_wave()
+    seed_plan, wave_plan = pending_plans
+    assert "InMemoryRelation" in wave_plan
+    assert "Window" not in wave_plan, wave_plan

@@ -115,8 +115,13 @@ def run_once(cpus: int, variants: int = int(os.environ.get("SPARK_GRAFT_URL_VARI
 def aggregate_event_log(evdir: str, t_min: float) -> list[dict]:
     """Parse a Spark event-log dir (Spark 4 rolling layout: a directory of
     events_* files) into per-stage task-metric aggregates; keeps only
-    stages submitted after ``t_min``. Shared by profile_wave.py."""
+    stages submitted after ``t_min``, each with the job description it was
+    submitted under (None when unset). Shared by profile_wave.py."""
     stages: dict[tuple, dict] = {}
+    descriptions: dict[tuple, str | None] = {}
+
+    def _stage_key(si: dict) -> tuple:
+        return (si["Stage ID"], si.get("Stage Attempt ID", si.get("Attempt ID", 0)))
 
     def _event_lines():
         root = [
@@ -142,13 +147,19 @@ def aggregate_event_log(evdir: str, t_min: float) -> list[dict]:
             ev = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if ev.get("Event") == "SparkListenerStageCompleted":
+        if ev.get("Event") == "SparkListenerStageSubmitted":
+            props = ev.get("Properties") or {}
+            descriptions[_stage_key(ev["Stage Info"])] = props.get(
+                "spark.job.description"
+            )
+        elif ev.get("Event") == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
             if si.get("Submission Time", 0) / 1000.0 < t_min:
                 continue
-            key = (si["Stage ID"], si.get("Stage Attempt ID", si.get("Attempt ID", 0)))
+            key = _stage_key(si)
             stages[key] = {
                 "name": si["Stage Name"].split("\n")[0][:60],
+                "description": descriptions.get(key),
                 "tasks": si["Number of Tasks"],
                 "wall_s": round(
                     (si["Completion Time"] - si["Submission Time"]) / 1000.0, 2

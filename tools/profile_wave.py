@@ -5,13 +5,13 @@ standalone frontier bound; this tool attributes the gap so the
 10^8-URL-wave extrapolation in BASELINE.md rests on a measured stage
 breakdown instead of "fetch UDF + commit overhead by design".
 
-Primary attribution: ``CrawlRun.phase_seconds`` — the wave loop's four
+Two attributions: ``CrawlRun.phase_seconds`` — the wave loop's four
 blocking driver steps (pending_probe / fetch / children_seen / commit)
-cover the whole wave wall, measured in the driver where they're
-unambiguous. The event-log per-stage metrics are reported as a secondary
-view (summed run/GC/shuffle), but the commit's concurrent table writes all
-surface as anonymous CompletableFuture callsites, so stage NAMES cannot
-attribute phases — that's why the driver-step timers exist.
+cover the whole wave wall, timed around those calls — and the event log's
+per-stage metrics grouped by job description: the wave tags its jobs
+``wave:<phase>`` and ``SnapshotStore.commit`` tags each concurrent table
+write ``commit:<table>``. Stage wall seconds of concurrent stages overlap,
+so a group's ``wall_s`` is a sum of stage spans, not a share of the wave.
 
 Usage: PYTHONPATH=. python tools/profile_wave.py [cpus] [queries]
 (cpus defaults to session.DEFAULT_CPUS: SPARK_GRAFT_CPUS or the core count)
@@ -45,7 +45,7 @@ def main() -> None:
     from price_crawler_spark.frontier.wave import CrawlRun
     from price_crawler_spark.session import get_spark
 
-    evdir = f"/tmp/spark-events-wave-{cpus}"
+    evdir = os.path.join(tempfile.gettempdir(), f"spark-events-wave-{cpus}")
     shutil.rmtree(evdir, ignore_errors=True)
     os.makedirs(evdir, exist_ok=True)
     spark = get_spark(
@@ -78,6 +78,17 @@ def main() -> None:
 
     stages = aggregate_event_log(evdir, t0)
     phases = {k: round(v, 2) for k, v in phase_seconds.items()}
+    by_description: dict[str, dict] = {}
+    for s in stages:
+        g = by_description.setdefault(
+            s["description"] or "(none)", {"stages": 0, "wall_s": 0.0, "run_s": 0.0}
+        )
+        g["stages"] += 1
+        g["wall_s"] += s["wall_s"]
+        g["run_s"] += s["run_s"]
+    for g in by_description.values():
+        g["wall_s"] = round(g["wall_s"], 2)
+        g["run_s"] = round(g["run_s"], 2)
     top = sorted(stages, key=lambda s: -s["wall_s"])[:8]
     # Two imbalance views per stage. "balance" (stage wall ÷ run_sum/cores)
     # is the one that matters: how much longer the stage ran than perfect
@@ -108,6 +119,7 @@ def main() -> None:
             "shuffle_write_mb": round(sum(s["sh_write_mb"] for s in stages), 2),
             "n_stages": len(stages),
         },
+        "stage_seconds_by_description": dict(sorted(by_description.items())),
         "top_stages_by_wall": top,
     }, indent=1))
 
