@@ -159,8 +159,8 @@ class ShardedBloom(ShardedFilter):
 
 class ShardedCuckoo(ShardedFilter):
     """Distributed sharded cuckoo filter — the deletion-capable URL-seen
-    variant (re-crawl invalidation: a URL scheduled for refresh is DELETEd
-    from the filter so the next wave treats it as new). Each shard is a
+    variant (re-crawl invalidation: ``CrawlRun.invalidate`` re-enqueues
+    fetched URLs and :meth:`reinsert`s their hashes). Each shard is a
     :class:`CuckooShard` blob in the (shard, bits) snapshot table.
     """
 
@@ -203,6 +203,15 @@ class ShardedCuckoo(ShardedFilter):
 
     def delete(self, gone: DataFrame, table: DataFrame | None) -> DataFrame:
         return self._mutate(gone, table, self._delete)
+
+    def _reinsert(self, raw: bytes | None, rows: pd.DataFrame) -> bytes:
+        return self._insert(self._delete(raw, rows), rows)
+
+    def reinsert(self, keys: DataFrame, table: DataFrame | None) -> DataFrame:
+        """``insert(keys, delete(keys, table))`` in one cogroup pass: each
+        shard's kernel deletes then re-inserts its sorted hashes, so the
+        bytes equal the two passes'."""
+        return self._mutate(keys, table, self._reinsert)
 
 
 def dedup_in_batch(cand: DataFrame, order_col: str = "seq_key") -> DataFrame:

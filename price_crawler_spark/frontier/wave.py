@@ -38,6 +38,7 @@ from price_crawler_spark.frontier.seen import (
 from price_crawler_spark.functions.urls import (
     canonicalize_with_host_arrow,
     url_hash,
+    url_hash_relation,
 )
 from price_crawler_spark.sources.store import SnapshotStore
 from price_crawler_spark.sources.synthetic import robots_rows
@@ -109,8 +110,10 @@ class CrawlRun:
         # by fetched.count) | children (canonicalize+bloom+seen, by
         # new_children.count) | commit (the concurrent snapshot writes).
         # Every Spark job a phase submits also carries the job description
-        # "wave:<phase>" (the commit's writes "commit:<table>"), which is
-        # how tools/profile_wave.py groups event-log stages.
+        # "wave:<phase>" (the commit's writes "commit:<table>", the seed
+        # commit's "seed_commit:<table>"; invalidate() tags its jobs
+        # "invalidate:<step>"), which is how tools/profile_wave.py groups
+        # event-log stages.
         self.phase_seconds: dict[str, float] = {}
 
     def _phase(self, name: str, t0: float) -> None:
@@ -118,10 +121,10 @@ class CrawlRun:
             time.time() - t0
         )
 
-    def _describe(self, phase: str | None) -> None:
+    def _describe(self, phase: str | None, scope: str = "wave") -> None:
         """Tag the Spark jobs this thread submits from here on."""
         self.spark.sparkContext.setJobDescription(
-            None if phase is None else f"wave:{phase}"
+            None if phase is None else f"{scope}:{phase}"
         )
 
     # -- state ---------------------------------------------------------------
@@ -155,6 +158,7 @@ class CrawlRun:
                 tables_replace={"pending": frontier, "bloom": bloom_table},
                 tables_append={"seen": seen},
                 meta={"next_wave": 0, "queries": self.queries},
+                job_prefix="seed_commit",
             )
         finally:
             frontier.unpersist()
@@ -361,78 +365,79 @@ class CrawlRun:
     # -- re-crawl invalidation (north rule's deletion case) -------------------
 
     def invalidate(self, urls: list[str]) -> int:
-        """Delete fetched URLs from the URL-seen layer and re-enqueue them,
-        so the next wave re-fetches each EXACTLY once (re-crawl
-        invalidation — the case the north rule's cuckoo fallback exists
-        for; Bloom bits cannot be unset, so this requires
-        ``seen_filter='cuckoo'``).
+        """Re-enqueue fetched URLs so the next wave re-fetches each EXACTLY
+        once (re-crawl invalidation — the case the north rule's cuckoo
+        fallback exists for; Bloom bits cannot be unset, so this requires
+        ``seen_filter='cuckoo'``). Returns the number of rows re-enqueued.
 
-        The cycle runs the REAL paths end-to-end: cuckoo ``delete`` on the
-        filter shards + anti-join removal from the exact seen table, then
-        the re-enqueued rows go back through the NORMAL enqueue gate
-        (``filter_new`` probe + filter insert + seen re-add) — so a later
-        re-discovery of the same URL is deduped again, and the final seen
-        set stays exact. The old document rows are kept (a re-crawl is a
-        new snapshot; readers take the latest wave per doc_id); the URL's
-        old terminal frontier_log row is removed because the row is live
-        again. At 100 TB the seen/frontier_log edits map to Iceberg
-        row-level DELETEs (merge-on-read position deletes — O(delete set));
-        this parquet shim rewrites the two tables instead. Returns the
-        number of rows re-enqueued.
+        One pass over the URL-seen layer: the URLs' fetched ``frontier_log``
+        rows (the hits) go straight back to ``pending`` — every hit hash is
+        already seen, so the enqueue gate could never drop one — and the
+        cuckoo shards holding them get one cogroup that deletes then
+        re-inserts each hit hash (``ShardedCuckoo.reinsert``): every
+        fingerprint stays, since a re-enqueued URL is still seen, and the
+        shard bytes are those of a delete pass followed by an insert pass.
+        The URLs are canonicalized and hashed on the driver
+        (``url_hash_relation``), where the list already is. The ``seen``
+        table is left as it is: the wave commit that enqueued a hit wrote
+        its hash to ``seen`` in the same snapshot, and a re-enqueued URL
+        stays seen, so a later re-discovery of it is dropped as before and
+        the seen set stays exact. The hits' terminal ``frontier_log`` rows
+        are removed because the rows are live again; at 100 TB that edit
+        maps to an Iceberg row-level DELETE (merge-on-read — O(delete
+        set)), and this parquet shim rewrites the table instead. The old
+        document rows are kept, so ``documents()`` and ``crawl_order()``
+        list a re-crawled doc once per fetch. A call that matches no
+        fetched row commits nothing.
         """
         if not isinstance(self.bloom, ShardedCuckoo):
             raise ValueError(
                 "invalidate() requires seen_filter='cuckoo' — Bloom bits "
                 "cannot be deleted"
             )
+        self._describe("hits", "invalidate")
+        try:
+            return self._invalidate(urls)
+        finally:
+            self._describe(None)
+
+    def _invalidate(self, urls: list[str]) -> int:
         spark = self.spark
         log = self.store.read(spark, "frontier_log")
         if log is None or not urls:
             return 0
-        hashes = (
-            spark.createDataFrame([(u,) for u in urls], "url string")
-            .select(canonicalize_with_host_arrow("url").alias("c"))
-            .select(url_hash(F.col("c.canonical_url")).alias("url_hash"))
-            .distinct()
-            .persist()  # read by four jobs; each would re-run the Python UDF
-        )
-        hits = log.join(hashes, "url_hash", "semi").filter(
-            F.col("status") == "fetched"
-        )
-        hit_hashes = hits.select("url_hash")
-        re_rows = (
-            hits.withColumn("attempts", F.lit(0))
-            .withColumn("status", F.lit("pending"))
-            .withColumn("wave", F.lit(self.next_wave()))
-            .select(*FRONTIER_COLS)
-        )
-        seen = self.store.read(spark, "seen")
-        filt = self.store.read(spark, "bloom")
-        seen_rest = seen.join(hit_hashes, "url_hash", "left_anti")
-        filt_deleted = self.bloom.delete(hit_hashes, filt)
-        re_new = (
-            filter_new(re_rows, seen_rest, filt_deleted, self.bloom)
-            .select(*FRONTIER_COLS)
+        # read by three of the commit's writes
+        hits = (
+            log.join(url_hash_relation(spark, urls), "url_hash", "semi")
+            .filter(F.col("status") == "fetched")
             .persist()
         )
-        n = re_new.count()
-        pending = self.store.read(spark, "pending")
-        new_pending = (
-            re_new if pending is None else pending.unionByName(re_new)
-        )
-        self.store.commit(
-            tables_replace={
-                "pending": new_pending,
-                "bloom": self.bloom.insert(
-                    re_new.select("url_hash"), filt_deleted
-                ),
-                "seen": seen_rest.unionByName(re_new.select("url_hash")),
-                "frontier_log": log.join(hit_hashes, "url_hash", "left_anti"),
-            },
-            meta={"next_wave": self.next_wave(), "queries": self.queries},
-        )
-        re_new.unpersist()
-        hashes.unpersist()
+        try:
+            n = hits.count()
+            if n == 0:
+                return 0
+            self._describe("commit", "invalidate")
+            wave = self.next_wave()
+            hit_hashes = hits.select("url_hash")
+            re_rows = (
+                hits.withColumn("attempts", F.lit(0))
+                .withColumn("status", F.lit("pending"))
+                .withColumn("wave", F.lit(wave))
+                .select(*FRONTIER_COLS)
+            )
+            self.store.commit(
+                tables_replace={
+                    "pending": self.store.read(spark, "pending").unionByName(re_rows),
+                    "bloom": self.bloom.reinsert(
+                        hit_hashes, self.store.read(spark, "bloom")
+                    ),
+                    "frontier_log": log.join(hit_hashes, "url_hash", "left_anti"),
+                },
+                meta={"next_wave": wave, "queries": self.queries},
+                job_prefix="invalidate:commit",
+            )
+        finally:
+            hits.unpersist()
         return n
 
     # -- inspection ----------------------------------------------------------

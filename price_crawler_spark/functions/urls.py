@@ -31,7 +31,7 @@ Two mirrors outside the engine check it: the DuckDB CTE below (the
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TRACKING_PARAM_PATTERN = r"^(utm_[^=]*|fbclid|gclid|ref)="
@@ -228,6 +228,22 @@ def duckdb_canonical_cte(source: str, url_expr: str) -> str:
 def url_hash(col: Column | str) -> Column:
     """xxhash64 of the canonical URL — the frontier/seen key (north rule)."""
     return F.xxhash64(_col(col))
+
+
+def url_hash_relation(spark: SparkSession, urls: list[str]) -> DataFrame:
+    """``url_hash`` of each distinct canonical form of a driver-side URL
+    list, as a frame that plans as a JVM ``LocalRelation``: the engine's
+    kernel (:func:`_canon_batch_pa`) canonicalizes the list on the driver
+    and the JVM's xxhash64 hashes it, so building the frame runs no Spark
+    job and no Python worker."""
+    import pandas as pd
+    import pyarrow as pa
+
+    canonical, _host = _canon_batch_pa(pa.array(urls, pa.string()))
+    frame = pd.DataFrame({"canonical_url": canonical.to_pandas()}).drop_duplicates()
+    return spark.createDataFrame(frame, "canonical_url string").select(
+        url_hash("canonical_url").alias("url_hash")
+    )
 
 
 def url_host(col: Column | str) -> Column:

@@ -56,8 +56,10 @@ class SnapshotStore:
         tables_replace: dict[str, DataFrame] | None = None,
         tables_append: dict[str, DataFrame] | None = None,
         meta: dict | None = None,
+        job_prefix: str = "commit",
     ) -> int:
-        """Write all table data, then atomically swap the manifest."""
+        """Write all table data, then atomically swap the manifest. Each
+        table's write jobs carry the description ``<job_prefix>:<table>``."""
         manifest = self._read_manifest()
         cur = manifest["snapshots"][-1] if manifest["snapshots"] else None
         snap_id = (cur["id"] + 1) if cur else 0
@@ -80,7 +82,7 @@ class SnapshotStore:
             name, rel, df, _replace = job
             # job descriptions are thread-local: tag this writer thread's
             # jobs with the table it writes
-            df.sparkSession.sparkContext.setJobDescription(f"commit:{name}")
+            df.sparkSession.sparkContext.setJobDescription(f"{job_prefix}:{name}")
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
 
         if writes:

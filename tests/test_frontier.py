@@ -108,6 +108,23 @@ def test_canonicalizer_arrow_variant_parity():
     assert got == expected
 
 
+def test_url_hash_relation_matches_engine_path(spark):
+    """The driver-side hash frame invalidate() joins on holds the url_hash
+    the wave path gives each URL, once per canonical form, and plans as a
+    LocalRelation."""
+    from price_crawler_spark.functions.urls import url_hash, url_hash_relation
+
+    cases = _adversarial_urls()
+    rel = url_hash_relation(spark, cases)
+    assert rel._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    got = [r[0] for r in rel.collect()]
+    engine = spark.createDataFrame([(u,) for u in cases], "url string").select(
+        url_hash(canonicalize_with_host_arrow("url")["canonical_url"])
+    )
+    assert len(got) == len(set(got))
+    assert set(got) == {r[0] for r in engine.collect()}
+
+
 def test_crawl_order_matches_reference_oracle(crawl, oracle):
     got = [
         (r["wave"], r["seq_key"], r["doc_id"], r["store"])
@@ -540,6 +557,18 @@ def test_cuckoo_insert_delete_bytes_pinned(spark):
     }
 
 
+def test_cuckoo_reinsert_equals_delete_then_insert(spark):
+    """reinsert's one pass writes the bytes of a delete pass followed by an
+    insert pass, and passes shards without keys through."""
+    ck = ShardedCuckoo(n_shards=8, n_buckets=1 << 10)
+    df = spark.range(0, 400).select(F.xxhash64("id").alias("url_hash"))
+    table = ck.insert(df, None)
+    keys = spark.range(0, 5).select(F.xxhash64("id").alias("url_hash"))
+    assert _shard_sha256(ck.reinsert(keys, table)) == _shard_sha256(
+        ck.insert(keys, ck.delete(keys, table))
+    )
+
+
 def test_cuckoo_saturation_raises(spark):
     """A shard that cannot hold an insert fails the job instead of dropping
     the fingerprint its eviction walk holds (an earlier URL would then
@@ -692,6 +721,135 @@ def test_cuckoo_crawl_invalidate_refetch_cycle(spark, tmp_path_factory, oracle):
     assert run.frontier().filter("status = 'pending'").count() == 0
     # a second invalidate of a never-fetched URL is a no-op
     assert run.invalidate(["https://nowhere.example.com/x"]) == 0
+
+
+@pytest.fixture(scope="module")
+def cuckoo_wave0(spark, tmp_path_factory):
+    """A cuckoo-gated root after one wave; tests copy it before mutating."""
+    root = str(tmp_path_factory.mktemp("cuckoo_wave0"))
+    run = CrawlRun(
+        spark, root, QUERIES, wave_seconds=WAVE_SECONDS, seen_filter="cuckoo"
+    )
+    assert run.run_wave()
+    return root
+
+
+def _open_copy(spark, src, dst) -> CrawlRun:
+    import shutil
+
+    shutil.copytree(src, dst)
+    return CrawlRun(
+        spark, str(dst), QUERIES, wave_seconds=WAVE_SECONDS, seen_filter="cuckoo"
+    )
+
+
+def _rows_sha256(df) -> str:
+    """sha256 of a table's rows, columns by name and rows sorted, so file
+    layout and column order do not count."""
+    import hashlib
+
+    rows = sorted(repr(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def test_invalidate_state_pinned(spark, cuckoo_wave0, tmp_path):
+    """After invalidate() of a fixed sample of one wave's fetches, the
+    cuckoo shards, seen, pending and frontier_log equal the ones the
+    four-pass invalidate (delete, probe, anti-join, insert) wrote: bloom as
+    one sha256 over the sorted per-shard sha256s, the others as sorted-row
+    sha256s."""
+    import hashlib
+
+    run = _open_copy(spark, cuckoo_wave0, tmp_path / "root")
+    fetched = sorted(
+        r[0] for r in run.documents().filter("wave = 0").select("doc_id").collect()
+    )
+    sample = fetched[::3] + ["https://nowhere.example.com/x"]
+    assert run.invalidate(sample) == len(fetched[::3])
+    shards = sorted(
+        (r[0], r[1])
+        for r in run.store.read(spark, "bloom")
+        .select("shard", F.sha2("bits", 256))
+        .collect()
+    )
+    got = {"bloom": hashlib.sha256(repr(shards).encode()).hexdigest()}
+    for t in ("seen", "pending", "frontier_log"):
+        got[t] = _rows_sha256(run.store.read(spark, t))
+    assert got == {
+        "bloom": "a1e4f5f6c5415256e30cbc816d4c19afe5abf83e9612806ef6ade4d421eb5eb3",
+        "seen": "eae141bc2297b27007a9460eedff3c1e7dccd258e0656ae880fe34042db225d0",
+        "pending": "7666a13ca92606d062d31cc7a170316d9f54a0aa1de8341dc8eea35f8f770158",
+        "frontier_log": "e37f3f3611020e7c175ee54ef4c0935218e62358bf38fb6305230259ef87e8ad",
+    }
+
+
+def test_noop_invalidate_commits_nothing(spark, cuckoo_wave0, tmp_path):
+    """An invalidate() that matches no fetched row leaves the snapshot and
+    every data directory as they were."""
+    import os
+
+    run = _open_copy(spark, cuckoo_wave0, tmp_path / "root")
+    snap = run.store.current()["id"]
+    data = os.path.join(run.store.root, "data")
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), data)
+            for d, _dirs, files in os.walk(data)
+            for f in files
+        )
+
+    before = listing()
+    never_fetched = run.store.read(spark, "pending").first()["url"]
+    assert run.invalidate(["https://nowhere.example.com/x", never_fetched]) == 0
+    assert run.store.current()["id"] == snap
+    assert listing() == before
+
+
+def test_invalidate_with_pending_relinked_url(spark, tmp_path):
+    """invalidate() while pending is non-empty, on a detail page X together
+    with the search page P that links it: the next wave re-fetches P, whose
+    links re-discover X while X is pending again. X and P are each fetched
+    exactly once more, the seen table holds X's hash once, and no other
+    URL is fetched twice."""
+    run = CrawlRun(
+        spark, str(tmp_path), QUERIES, wave_seconds=WAVE_SECONDS,
+        seen_filter="cuckoo",
+    )
+    assert run.run(max_waves=2) == 2
+    assert run.store.read(spark, "pending").count() > 0
+    docs = run.documents()
+    wave0 = docs.filter("wave = 0").select("doc_id", "seq_key").collect()
+    wave1 = docs.filter("wave = 1").select("doc_id", "seq_key").collect()
+    # a child's seq_key extends its parent's
+    p, x = next(
+        (p, x)
+        for p in sorted(wave0, key=lambda r: r["seq_key"])
+        for x in sorted(wave1, key=lambda r: r["seq_key"])
+        if x["seq_key"].startswith(p["seq_key"])
+    )
+    assert run.invalidate([p["doc_id"], x["doc_id"]]) == 2
+    run.run(max_waves=8)
+    # P's re-fetch, and so X's re-discovery, happens in the next wave
+    refetched_p = run.documents().filter(F.col("doc_id") == p["doc_id"])
+    assert sorted(r["wave"] for r in refetched_p.collect()) == [0, 2]
+    assert run.frontier().filter("status = 'pending'").count() == 0
+
+    counts = {
+        r["doc_id"]: r["count"]
+        for r in run.documents().groupBy("doc_id").count().collect()
+    }
+    assert counts[p["doc_id"]] == 2 and counts[x["doc_id"]] == 2
+    assert {d for d, c in counts.items() if c > 1} == {p["doc_id"], x["doc_id"]}
+
+    x_hash = (
+        run.frontier().filter(F.col("canonical_url") == x["doc_id"])
+        .first()["url_hash"]
+    )
+    seen = [r[0] for r in run.store.read(spark, "seen").collect()]
+    assert seen.count(x_hash) == 1
+    assert len(seen) == len(set(seen))
+    assert set(seen) == {r[0] for r in run.frontier().select("url_hash").collect()}
 
 
 def test_bloom_run_rejects_invalidate(spark, tmp_path_factory):

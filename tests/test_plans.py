@@ -279,3 +279,37 @@ def test_wave_commit_reuses_the_schedule(spark, tmp_path, monkeypatch):
     seed_plan, wave_plan = pending_plans
     assert "InMemoryRelation" in wave_plan
     assert "Window" not in wave_plan, wave_plan
+
+
+def test_invalidate_commit_runs_one_filter_pass(spark, tmp_path, monkeypatch):
+    """invalidate()'s commit holds one filter cogroup, in its bloom frame,
+    and leaves the seen table alone: the hits re-enqueue without a probe
+    or an anti-join, and the cuckoo delete and re-insert share one pass."""
+    import price_crawler_spark.sources.store as store_mod
+    from price_crawler_spark.frontier.wave import CrawlRun
+
+    run = CrawlRun(
+        spark, str(tmp_path), ["RTX 4090"], wave_seconds=10.0, seen_filter="cuckoo"
+    )
+    assert run.run_wave()
+    target = run.documents().first()["doc_id"]
+
+    real_commit = store_mod.SnapshotStore.commit
+    commits = []
+
+    def recording_commit(self, tables_replace=None, tables_append=None, **kwargs):
+        frames = {**(tables_replace or {}), **(tables_append or {})}
+        commits.append({
+            name: _nodes_outside_cache(df).count("FlatMapCoGroupsInPandas")
+            for name, df in frames.items()
+        })
+        return real_commit(
+            self, tables_replace=tables_replace, tables_append=tables_append, **kwargs
+        )
+
+    monkeypatch.setattr(store_mod.SnapshotStore, "commit", recording_commit)
+    assert run.invalidate([target]) == 1
+    (cogroups,) = commits
+    assert "seen" not in cogroups, cogroups
+    assert cogroups.pop("bloom") == 1
+    assert sum(cogroups.values()) == 0, cogroups

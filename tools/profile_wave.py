@@ -10,8 +10,9 @@ blocking driver steps (pending_probe / fetch / children_seen / commit)
 cover the whole wave wall, timed around those calls — and the event log's
 per-stage metrics grouped by job description: the wave tags its jobs
 ``wave:<phase>`` and ``SnapshotStore.commit`` tags each concurrent table
-write ``commit:<table>``. Stage wall seconds of concurrent stages overlap,
-so a group's ``wall_s`` is a sum of stage spans, not a share of the wave.
+write ``commit:<table>`` (the seed commit's ``seed_commit:<table>``).
+Stage wall seconds of concurrent stages overlap, so a group's ``wall_s``
+is a sum of stage spans, not a share of the wave.
 
 Usage: PYTHONPATH=. python tools/profile_wave.py [cpus] [queries]
 (cpus defaults to session.DEFAULT_CPUS: SPARK_GRAFT_CPUS or the core count)
