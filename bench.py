@@ -17,9 +17,12 @@ samples are taken so one co-tenant spike cannot own the official record;
 ``queries_min_sec`` carries the per-query interference-free capacity.
 
 ``--crawl-only`` runs just the frontier job (used by --scaling subprocesses).
-``--scaling`` runs the identical frontier job at local[8] and local[32] in
-fresh subprocesses and reports throughput at both plus N→4N efficiency —
-the sandbox stand-in for the north rule's two-cluster-size criterion.
+``--scaling`` runs the identical frontier job at local[N] and local[4N] in
+fresh subprocesses, N a quarter of the box's cores (``scaling_legs``), and
+reports throughput at both plus N→4N efficiency — the sandbox stand-in for
+the north rule's two-cluster-size criterion.
+``--engine`` runs the full wave loop under a Spark event log and breaks its
+wall down by driver phase and by job description.
 
 All timings force full materialization via the noop sink (no collect of
 big results to the driver; the driver never becomes the bottleneck).
@@ -304,6 +307,107 @@ def run_skew() -> None:
     spark.stop()
 
 
+# Fetch-group granularity of the engine run (r5): a mega host's selected URLs
+# split over this many salt buckets — smaller fetch groups for the 4×-tasks
+# late binding in run_engine (measured balance 1.69 vs 1.90 at 16 buckets).
+# The selected set is identical at any bucket count.
+ENGINE_SALT_BUCKETS = 64
+
+
+def event_log_conf(evdir: str) -> dict[str, str]:
+    """Session config that writes one uncompressed event-log file per
+    application into ``evdir`` (the layout ``aggregate_event_log`` reads)."""
+    return {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": evdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+
+
+_TASK_TOTALS = (
+    "run_s", "gc_s", "cpu_s", "deser_s", "sh_write_mb", "sh_read_mb", "max_task_s",
+)
+
+
+def aggregate_event_log(evdir: str, t_min: float) -> list[dict]:
+    """Per-stage task-metric totals from the one application event log in
+    ``evdir``: stage wall (submit → completion), summed executor run, CPU,
+    GC and deserialize seconds, the longest task, and shuffle MB. Keeps the
+    stages submitted at or after ``t_min`` (epoch seconds), each with the
+    job description it was submitted under (None when unset)."""
+    log = next(
+        f for f in sorted(os.listdir(evdir))
+        if not f.startswith(".") and not f.endswith(".inprogress")
+    )
+    descriptions: dict[tuple, str | None] = {}
+    totals: dict[tuple, dict] = {}
+    completed: dict[tuple, dict] = {}
+    with open(os.path.join(evdir, log)) as f:
+        for line in f:
+            try:
+                ev = json.loads(line)
+            except json.JSONDecodeError:
+                continue
+            kind = ev.get("Event")
+            if kind == "SparkListenerStageSubmitted":
+                si = ev["Stage Info"]
+                descriptions[(si["Stage ID"], si["Stage Attempt ID"])] = (
+                    ev.get("Properties") or {}
+                ).get("spark.job.description")
+            elif kind == "SparkListenerTaskEnd":
+                m = ev.get("Task Metrics") or {}
+                t = totals.setdefault(
+                    (ev["Stage ID"], ev["Stage Attempt ID"]),
+                    dict.fromkeys(_TASK_TOTALS, 0.0),
+                )
+                rt = m.get("Executor Run Time", 0) / 1000.0
+                t["run_s"] += rt
+                t["max_task_s"] = max(t["max_task_s"], rt)
+                t["gc_s"] += m.get("JVM GC Time", 0) / 1000.0
+                t["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
+                t["deser_s"] += m.get("Executor Deserialize Time", 0) / 1000.0
+                w = m.get("Shuffle Write Metrics") or {}
+                r = m.get("Shuffle Read Metrics") or {}
+                t["sh_write_mb"] += w.get("Shuffle Bytes Written", 0) / 1e6
+                t["sh_read_mb"] += (
+                    r.get("Local Bytes Read", 0) + r.get("Remote Bytes Read", 0)
+                ) / 1e6
+            elif kind == "SparkListenerStageCompleted":
+                si = ev["Stage Info"]
+                if si.get("Submission Time", 0) / 1000.0 >= t_min:
+                    completed[(si["Stage ID"], si["Stage Attempt ID"])] = si
+    stages = []
+    for key in sorted(completed):
+        si = completed[key]
+        t = totals.get(key, dict.fromkeys(_TASK_TOTALS, 0.0))
+        stages.append({
+            "name": si["Stage Name"].split("\n")[0][:60],
+            "description": descriptions.get(key),
+            "tasks": si["Number of Tasks"],
+            "wall_s": round(
+                (si["Completion Time"] - si["Submission Time"]) / 1000.0, 2
+            ),
+            **{k: round(v, 2) for k, v in t.items()},
+        })
+    return stages
+
+
+def stage_seconds_by_description(stages: list[dict]) -> dict[str, dict]:
+    """Stage count, summed stage wall and summed executor run seconds per job
+    description. Concurrent stages overlap, so a group's ``wall_s`` is a sum
+    of stage spans, not a share of the run's wall."""
+    groups: dict[str, dict] = {}
+    for s in stages:
+        g = groups.setdefault(
+            s["description"] or "(none)", {"stages": 0, "wall_s": 0.0, "run_s": 0.0}
+        )
+        g["stages"] += 1
+        g["wall_s"] = round(g["wall_s"] + s["wall_s"], 2)
+        g["run_s"] = round(g["run_s"] + s["run_s"], 2)
+    return dict(sorted(groups.items()))
+
+
 def run_engine() -> None:
     """Full wave-loop throughput (schedule → politeness → fetch UDF →
     extraction-ready docs → snapshot commit) on an expanded synthetic web:
@@ -312,45 +416,56 @@ def run_engine() -> None:
     retries) — the honest end-to-end number, vs. the frontier job which
     isolates the dedup hot path. Politeness is disabled via a huge
     wave-seconds budget (throughput mode; quota semantics are pytest-gated
-    separately)."""
+    separately).
+
+    The run always writes a Spark event log to a temporary directory, and
+    the breakdown comes in two views. ``driver_phase_seconds`` is
+    ``CrawlRun.phase_seconds``, the wave loop's blocking driver steps;
+    ``phase_coverage_of_wall`` is their share of the run's wall (driver
+    plan building between the steps is outside them).
+    ``stage_seconds_by_description`` groups the event log's stages by the
+    job tags the engine sets: ``wave:<phase>``, ``commit:<table>``,
+    ``seed_commit:<table>`` and ``invalidate:<step>``."""
     import tempfile
 
     os.environ.setdefault("SPARK_GRAFT_CATALOG_N", "3000")
     n_queries = int(os.environ.get("SPARK_GRAFT_ENGINE_QUERIES", "800"))
 
+    from price_crawler_spark.frontier.seeds import STORE_HOST
     from price_crawler_spark.frontier.wave import CrawlRun
     from price_crawler_spark.session import get_spark
 
-    from price_crawler_spark.frontier.seeds import STORE_HOST
-
-    # 4 tasks per core (r5): the fetch applyInPandas stage's group costs
-    # are heterogeneous by store, and at shuffle_partitions=cores each
-    # reduce task statically owns ~14 groups — the unlucky task IS the
-    # stage wall (measured balance wall/ideal 1.69-1.90, max task = stage
-    # wall). At 4× tasks late binding packs the heavy groups around:
-    # same 1.2M-URL profile, identical CPU (run_sum 8859 vs 8898 s) but
-    # fetch-stage wall 469 -> 348 s, balance 1.25, end-to-end 1,514 ->
-    # 2,140 URLs/s. Bytes-based AQE coalescing can't see Python-UDF CPU
-    # density, so the headroom must come from the initial task count.
-    spark = get_spark("bench-engine", cores=CPUS, shuffle_partitions=4 * CPUS)
     queries = [f"gpu{i:06d}" for i in range(n_queries)]
-    with tempfile.TemporaryDirectory() as root:
+    with tempfile.TemporaryDirectory() as evdir, \
+            tempfile.TemporaryDirectory() as root:
+        # 4 tasks per core (r5): the fetch applyInPandas stage's group costs
+        # are heterogeneous by store, and at shuffle_partitions=cores each
+        # reduce task statically owns ~14 groups — the unlucky task IS the
+        # stage wall (measured balance wall/ideal 1.69-1.90, max task = stage
+        # wall). At 4× tasks late binding packs the heavy groups around:
+        # same 1.2M-URL profile, identical CPU (run_sum 8859 vs 8898 s) but
+        # fetch-stage wall 469 -> 348 s, balance 1.25, end-to-end 1,514 ->
+        # 2,140 URLs/s. Bytes-based AQE coalescing can't see Python-UDF CPU
+        # density, so the headroom must come from the initial task count.
+        spark = get_spark(
+            "bench-engine", cores=CPUS, shuffle_partitions=4 * CPUS,
+            extra_conf=event_log_conf(evdir),
+        )
         t0 = time.time()
         # throughput mode: every host is salt-split (politeness quotas are
         # uncapped here, so per-host sequencing constraints don't apply)
         run = CrawlRun(
             spark, root, queries=queries, wave_seconds=1e6,
             mega_hosts=list(STORE_HOST.values()),
-            # 64 salt buckets (r5): smaller fetch groups for the 4×-tasks
-            # late binding above (measured balance 1.69 vs 1.90 at 16
-            # buckets). Selection set identical at any bucket count.
-            salt_buckets=int(os.environ.get("SPARK_GRAFT_SALT_BUCKETS", "64")),
+            salt_buckets=ENGINE_SALT_BUCKETS,
         )
         waves = run.run(max_waves=10)
         n_docs = run.documents().count()
         n_urls = run.frontier().count()
         dt = time.time() - t0
         phases = {k: round(v, 2) for k, v in run.phase_seconds.items()}
+        spark.stop()  # closes the event log
+        stages = aggregate_event_log(evdir, t0)
     print(json.dumps({
         "metric": "wave-loop end-to-end URLs/sec (incl. commits, bloom, retries)",
         "waves": waves,
@@ -359,10 +474,18 @@ def run_engine() -> None:
         "sec": round(dt, 2),
         "urls_per_sec": round(n_docs / dt, 1),
         "driver_phase_seconds": phases,
+        "phase_coverage_of_wall": round(sum(phases.values()) / dt, 3),
+        "eventlog_totals": {
+            "n_stages": len(stages),
+            "stage_wall_sum_s": round(sum(s["wall_s"] for s in stages), 2),
+            "executor_run_sum_s": round(sum(s["run_s"] for s in stages), 2),
+            "gc_sum_s": round(sum(s["gc_s"] for s in stages), 2),
+            "shuffle_write_mb": round(sum(s["sh_write_mb"] for s in stages), 2),
+        },
+        "stage_seconds_by_description": stage_seconds_by_description(stages),
         "catalog_n": int(os.environ["SPARK_GRAFT_CATALOG_N"]),
         "cpus": CPUS,
     }))
-    spark.stop()
 
 
 def run_crawl_only() -> None:
@@ -387,6 +510,33 @@ def run_crawl_only() -> None:
     spark.stop()
 
 
+def scaling_legs(cpus: int) -> tuple[int, int, int]:
+    """The ``--scaling`` legs for a box with ``cpus`` cores: (N, 4N, URL
+    variants). N is a quarter of the cores, at least 1: 1↔4 on a 4-core
+    box, 8↔32 on a 32-core one. The input is 64 URL variants per low-leg
+    core (512 at N=8, 76.8M URLs at sf0.1): the r3 arrow canonicalizer +
+    clustered repartition cut the 32c leg to ~5 s at 128 variants, at which
+    point the ~1.3 s parallelism-independent fixed cost (session/stage
+    setup, final single-partition agg) alone cost ~20 points of apparent
+    efficiency, so the low leg gets ~50 s of work and the number measures
+    the job, not the launch overhead."""
+    n = max(1, cpus // 4)
+    return n, 4 * n, 64 * n
+
+
+def leg_heap_mb(mem_mb: int) -> tuple[int, int]:
+    """(max heap, prefill) in MB for one scaling leg on a box with
+    ``mem_mb`` of RAM: a third of the RAM, capped at the 24 GiB the 32-core
+    legs ran with, prefilled to 5/6 of it (20 of 24 GiB there). The legs run
+    one at a time, so the prefill always fits in RAM. A scaling measurement
+    with an undersized heap measures the garbage collector, not the job: at
+    8 GiB the 32-core leg spent 50-130 summed seconds per stage in
+    stop-the-world GC (parallelism-independent wall time), halving apparent
+    efficiency; the prefill keeps a mid-leg heap growth out of the timing."""
+    heap = min(24 * 1024, mem_mb // 3)
+    return heap, heap * 5 // 6
+
+
 def _burn(n: int) -> int:
     x = 0
     for i in range(n):
@@ -404,57 +554,59 @@ def _pin_to_first_cores(n: int) -> None:
         pass
 
 
-def hw_ceiling() -> float:
-    """Measured compute-scaling ceiling of this box going an 8-core machine
-    → a 32-core machine (pure-CPU multiprocessing, no Spark; workers pinned
+def _ceiling(lo: int, hi: int, rate) -> float:
+    """Best-of-3 ``rate(procs)`` at ``lo`` and ``hi`` workers (the probes
+    suffer neighbor noise too), as the efficiency of going lo → hi."""
+    rates = {lo: 0.0, hi: 0.0}
+    for _ in range(3):
+        for procs in (lo, hi):
+            rates[procs] = max(rates[procs], rate(procs))
+    return rates[hi] * lo / (rates[lo] * hi)
+
+
+def hw_ceiling(lo: int, hi: int) -> float:
+    """Measured compute-scaling ceiling of this box going an lo-core machine
+    → an hi-core machine (pure-CPU multiprocessing, no Spark; workers pinned
     to the leg's core budget like the job legs are). On shared/virtualized
     hosts the hardware itself often delivers < 4× from 4× cores (frequency
     scaling / hypervisor caps); the job's efficiency is only meaningful
     relative to this."""
     import multiprocessing as mp
 
-    rates = {8: 0.0, 32: 0.0}
-    for _ in range(3):  # best-of-3: the probe suffers neighbor noise too
-        for procs in (8, 32):
-            with mp.Pool(procs, initializer=_pin_to_first_cores,
-                         initargs=(procs,)) as p:
-                t0 = time.time()
-                p.map(_burn, [4_000_000] * procs * 4)
-                rate = procs * 4 * 4_000_000 / (time.time() - t0)
-            rates[procs] = max(rates[procs], rate)
-    return rates[32] / (4 * rates[8])
+    def rate(procs: int) -> float:
+        with mp.Pool(procs, initializer=_pin_to_first_cores,
+                     initargs=(procs,)) as p:
+            t0 = time.time()
+            p.map(_burn, [4_000_000] * procs * 4)
+            return procs * 4 * 4_000_000 / (time.time() - t0)
+
+    return _ceiling(lo, hi, rate)
 
 
-def _scaling_pair() -> dict:
-    """One tightly-paired measurement: local[8] leg immediately followed by
-    the local[32] leg (fresh subprocess each, best-of-3 inside, core-pinned
-    — see below; ~13 min total window at 512 variants) and the pure-CPU
-    hardware-ceiling probe in the SAME window, so co-tenant interference
-    hits job and probe alike. Box load *before* the
-    pair is recorded so a reviewer can see which pairs ran quiesced. A
-    settle sleep first lets the previous pair's own load decay out of the
-    1-min average — otherwise the sample reads back our own finished work
-    and the quiesce signal is meaningless."""
+def _scaling_pair(lo: int, hi: int, variants: int) -> dict:
+    """One tightly-paired measurement: the local[N] leg immediately followed
+    by the local[4N] leg (``scaling_legs``; fresh subprocess each,
+    best-of-3 inside, core-pinned — see below) and the pure-CPU and
+    memory-bandwidth ceiling probes in the SAME window, so co-tenant
+    interference hits job and probes alike. Box load *before* the pair is
+    recorded so a reviewer can see which pairs ran quiesced. A settle sleep
+    first lets the previous pair's own load decay out of the 1-min average
+    — otherwise the sample reads back our own finished work and the quiesce
+    signal is meaningless. Explicit env (input size, heap, JVM options)
+    wins over the derived values."""
+    from perfbench.box import mem_total_mb
+
+    heap_mb, prefill_mb = leg_heap_mb(mem_total_mb())
     settle = int(os.environ.get("SPARK_GRAFT_SCALING_SETTLE_S", "75"))
     time.sleep(settle)
     load_before = round(os.getloadavg()[0], 1)
     out = {}
-    for cpus in (8, 32):
+    for cpus in (lo, hi):
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
                    SPARK_GRAFT_CRAWL_RUNS="3")
-        # 512 variants → 76.8M URLs: the r3 arrow canonicalizer + clustered
-        # repartition cut the 32c leg to ~5 s at 128 variants, at which point
-        # the ~1.3 s parallelism-independent fixed cost (session/stage setup,
-        # final single-partition agg) alone costs ~20 points of apparent
-        # efficiency. 4× the input amortizes it: legs run ~50 s (8c) / ~15 s
-        # (32c) and the measured number is the job, not the launch overhead.
-        env.setdefault("SPARK_GRAFT_URL_VARIANTS", "512")
-        # sized heap + G1: a scaling measurement with an undersized heap
-        # measures the garbage collector, not the job — at 8 GiB the 32-core
-        # leg spent 50-130 summed seconds per stage in stop-the-world GC
-        # (parallelism-independent wall time), halving apparent efficiency.
-        env.setdefault("SPARK_DRIVER_MEM", "24g")
-        env.setdefault("SPARK_GRAFT_JVM_OPTS", "-XX:+UseG1GC -Xms20g")
+        env.setdefault("SPARK_GRAFT_URL_VARIANTS", str(variants))
+        env.setdefault("SPARK_DRIVER_MEM", f"{heap_mb}m")
+        env.setdefault("SPARK_GRAFT_JVM_OPTS", f"-XX:+UseG1GC -Xms{prefill_mb}m")
         # CORE-HONEST LEGS (r3): pin each leg to exactly `cpus` hardware
         # cores. Without the pin, a local[8] leg of a job with an Arrow
         # Python UDF really runs ~16 hardware threads (8 JVM task threads +
@@ -472,14 +624,20 @@ def _scaling_pair() -> dict:
         r = subprocess.run(
             cmd, env=env, capture_output=True, text=True, timeout=1800,
         )
-        line = r.stdout.strip().splitlines()[-1]
-        out[cpus] = json.loads(line)
-    eff = out[32]["urls_per_sec"] / (4 * out[8]["urls_per_sec"])
-    ceiling = hw_ceiling()
-    membw = hw_ceiling_membw()
+        if r.returncode:
+            # the JVM reports a failed start on the gateway's stdout
+            tail = r.stdout.splitlines()[-5:] + r.stderr.splitlines()[-20:]
+            raise RuntimeError(
+                f"local[{cpus}] scaling leg exited {r.returncode}:\n"
+                + "\n".join(tail)
+            )
+        out[cpus] = json.loads(r.stdout.strip().splitlines()[-1])
+    eff = out[hi]["urls_per_sec"] / (4 * out[lo]["urls_per_sec"])
+    ceiling = hw_ceiling(lo, hi)
+    membw = hw_ceiling_membw(lo, hi)
     return {
         "loadavg_before": load_before,
-        "local8": out[8], "local32": out[32],
+        f"local{lo}": out[lo], f"local{hi}": out[hi],
         "scaling_efficiency_Nto4N": round(eff, 3),
         "hw_ceiling_cpu_Nto4N": round(ceiling, 3),
         "hw_ceiling_membw_Nto4N": round(membw, 3),
@@ -513,8 +671,8 @@ def _membw_pass(reps: int) -> int:
     return int(b[0])
 
 
-def hw_ceiling_membw() -> float:
-    """Steady-state memory-BANDWIDTH scaling of this box going 8→32 workers
+def hw_ceiling_membw(lo: int, hi: int) -> float:
+    """Steady-state memory-BANDWIDTH scaling of this box going lo→hi workers
     (preallocated numpy copy loops — no allocator noise). String/regex-heavy
     Spark stages are partially bandwidth-bound, and on a single box 4×
     threads share ONE memory bus; on a real cluster 4× executors bring 4×
@@ -523,24 +681,23 @@ def hw_ceiling_membw() -> float:
     import multiprocessing as mp
 
     n, reps, tasks_per = 8_000_000, 6, 4
-    rates = {8: 0.0, 32: 0.0}
-    for _ in range(3):  # best-of-3, same discipline as hw_ceiling()
-        for procs in (8, 32):
-            with mp.Pool(procs, initializer=_membw_init,
-                         initargs=(n, procs)) as p:
-                # startup barrier only (faulting happens in the initializer;
-                # a map can't guarantee per-worker task distribution)
-                p.map(_membw_pass, [1] * procs * 2)
-                t0 = time.time()
-                p.map(_membw_pass, [reps] * procs * tasks_per)
-                rate = procs * tasks_per * reps * n * 16 / (time.time() - t0)
-            rates[procs] = max(rates[procs], rate)
-    return rates[32] / (4 * rates[8])
+
+    def rate(procs: int) -> float:
+        with mp.Pool(procs, initializer=_membw_init,
+                     initargs=(n, procs)) as p:
+            # startup barrier only (faulting happens in the initializer;
+            # a map can't guarantee per-worker task distribution)
+            p.map(_membw_pass, [1] * procs * 2)
+            t0 = time.time()
+            p.map(_membw_pass, [reps] * procs * tasks_per)
+            return procs * tasks_per * reps * n * 16 / (time.time() - t0)
+
+    return _ceiling(lo, hi, rate)
 
 
 def run_scaling() -> None:
     """North-rule two-cluster-size evidence. ``SPARK_GRAFT_SCALING_PAIRS``
-    (default 5) interleaved 8↔32 pairs; the headline number is the MEDIAN
+    (default 5) interleaved N↔4N pairs; the headline number is the MEDIAN
     normalized efficiency across pairs — not the best pair — so the claim
     doesn't rest on one lucky window. Each pair also records the 1-min load
     average sampled before it started: the quiesced-box protocol is
@@ -549,8 +706,9 @@ def run_scaling() -> None:
     hidden)."""
     import statistics
 
+    lo, hi, variants = scaling_legs(CPUS)
     n_pairs = int(os.environ.get("SPARK_GRAFT_SCALING_PAIRS", "5"))
-    pairs = [_scaling_pair() for _ in range(n_pairs)]
+    pairs = [_scaling_pair(lo, hi, variants) for _ in range(n_pairs)]
 
     def _med(rows, key):
         return round(statistics.median(p[key] for p in rows), 3) if rows else None
@@ -558,7 +716,10 @@ def run_scaling() -> None:
     quiet = [p for p in pairs if p["loadavg_before"] < 4.0]
     best = max(pairs, key=lambda p: p["normalized_efficiency"])
     print(json.dumps({
-        "metric": "frontier canonicalize+dedup+schedule URLs/sec, local[8] vs local[32]",
+        "metric": "frontier canonicalize+dedup+schedule URLs/sec, "
+                  f"local[{lo}] vs local[{hi}]",
+        "legs": [lo, hi],
+        "url_variants": int(os.environ.get("SPARK_GRAFT_URL_VARIANTS", variants)),
         "pairs": pairs,
         "median_raw_efficiency": _med(pairs, "scaling_efficiency_Nto4N"),
         "median_normalized_efficiency": _med(pairs, "normalized_efficiency"),
@@ -571,6 +732,11 @@ def run_scaling() -> None:
 
 
 def main() -> None:
+    if "--scaling" in sys.argv:
+        # before the posture below: each leg's heap and JVM options are
+        # derived for its own subprocess (leg_heap_mb)
+        run_scaling()
+        return
     # Measured-run JVM posture. Sized 24g MAX heap + G1, but NO -Xms
     # prefill here: A/B'd on the full query suite, `-Xms20g` produced
     # episodic multi-second G1 evacuation pauses that landed on random
@@ -583,9 +749,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_JVM_OPTS", "-XX:+UseG1GC")
     if "--crawl-only" in sys.argv:
         run_crawl_only()
-        return
-    if "--scaling" in sys.argv:
-        run_scaling()
         return
     if "--skew" in sys.argv:
         run_skew()

@@ -18,6 +18,9 @@ value-hashing).
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1663,7 +1666,6 @@ def q_streaming_seen_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection is the bounded distinct-URL result (the same thing the
     driver collects to hash anyway); a production run would point
     writeStream at a parquet/Iceberg sink instead."""
-    import os
     import shutil
     import tempfile
 
@@ -1911,7 +1913,6 @@ def q_crawl_search_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (no cross-process manifest races, no stale-cache-by-forgotten-tag;
     the crawl is deterministic, so every store holds the same content)."""
     import datetime
-    import os
 
     from price_crawler_spark.frontier.wave import CrawlRun
     from price_crawler_spark.operators.extraction import extract_products
@@ -2303,65 +2304,33 @@ def q_sanjing_card_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # registry ordering for the driver's capped correctness pass
 # ---------------------------------------------------------------------------
-# The driver verifies roughly the first 50 registry entries per round
-# (r2: 50 of 61, r3: 50 of 66, r4: 49 of 68). Order therefore encodes
-# priority: queries the driver did NOT check last round rotate to the front
-# (so every query is driver-re-verified at least every 2 rounds — VERDICT
-# r3 item 4, re-pointed at the 18 r4-unchecked by VERDICT r4 item 4), then
-# new/changed-this-round entries; rows hash-green in r4 with untouched code
-# go last, everything else keeps registration order.
+# The driver checks roughly the first 50 registry entries per round and
+# records the ones it checked in CORRECTNESS_r<round>.json beside the
+# package. Order therefore encodes priority: the queries whose last check is
+# oldest go first, so with 68 queries every one is re-checked at least every
+# second round.
 
-_PRIORITY = [
-    # the 18 r4-unchecked (all r3-green) — must land inside the cap this
-    # round (VERDICT r4 item 4 lists them by name)
-    "bundle_detect_pchome", "bundle_detect_sinya", "button_stock",
-    "cache_ttl_filter", "detail_stock_enrich", "dtsource_bundle_only",
-    "filter_stats", "generic_json_walk", "js_repair_parse",
-    "json_field_extract", "lineage_counts", "pagination",
-    "pixel_enrich", "pixel_mining", "spec_join", "spec_kv_parse",
-    "stock_predicate", "stock_sapphire",
-    # new in r5
-    "streaming_seen_equiv",
-    # plan changed in r5: the scan-parallelism guard now bin-packs with
-    # openCostInBytes (ADVICE r4) — re-verify every query that calls it
-    "dedup_minhash_lsh", "dedup_minhash_lsh_fast", "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    # engine path changed: the Column chain gave way to the Arrow kernel,
-    # and the DuckDB mirror now coalesces an empty param list to ''
-    "url_canonicalize",
-]
-_DEPRIORITIZED = [
-    # hash-green in r4, code untouched in r5
-    "dedup_exact", "price_extract", "price_strict_filter", "price_format",
-    "name_clean", "name_normalize", "search_term_normalize",
-    "name_clean_coolpc", "feature_extract", "dtsource_stock",
-    "sort_by_name", "url_id_extract", "url_absolutize", "ua_rotation",
-    "coolpc_js_arrays", "crawl_search_demo_rows", "momo_card_parse",
-    "sanjing_card_parse", "dedup_simhash",
-    "crawl_search_demo", "name_clean_momo", "coolpc_option_scan",
-    "bundle_detect", "pchome_stock", "sinya_detail_stock",
-    "dedup_first_wins", "politeness_quota",
-    "topk_per_store", "price_stats", "store_stats",
-    "windowed_event_counts", "similarity_match", "text_language_id",
-    "text_quality", "text_token_counts", "text_fingerprint",
-    "ann_cosine_topk", "ann_ivf_topk", "ann_signlsh_topk",
-    "multimodal_decode", "multimodal_frame_sample", "multimodal_resize",
-    "multimodal_features", "gh3c_stock",
-]
+_RECORDS_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def rotation_order(queries: list[str], records_dir: str = _RECORDS_DIR) -> list[str]:
+    """``queries`` ordered by the last round whose correctness record holds
+    each one, oldest first (never checked counts as round 0); ties keep the
+    given order, so with no record files the order is unchanged (as when
+    the package is imported from a zip)."""
+    last = dict.fromkeys(queries, 0)
+    for f in os.listdir(records_dir) if os.path.isdir(records_dir) else ():
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
+        if m:
+            with open(os.path.join(records_dir, f)) as fh:
+                for name in json.load(fh):
+                    if name in last:
+                        last[name] = max(last[name], int(m.group(1)))
+    return sorted(queries, key=last.__getitem__)
 
 
 def _reorder_registry() -> None:
-    ordered: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for n in _PRIORITY:
-        if n in QUERIES:
-            ordered[n] = QUERIES[n]
-    for n, fn in QUERIES.items():
-        if n not in ordered and n not in _DEPRIORITIZED:
-            ordered[n] = fn
-    for n in _DEPRIORITIZED:
-        if n in QUERIES:
-            ordered[n] = QUERIES[n]
-    assert set(ordered) == set(QUERIES)
+    ordered = {n: QUERIES[n] for n in rotation_order(list(QUERIES))}
     QUERIES.clear()
     QUERIES.update(ordered)
 

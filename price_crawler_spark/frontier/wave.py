@@ -103,17 +103,17 @@ class CrawlRun:
         self.salt_buckets = salt_buckets
         self.robots = robots_table(spark, robots or robots_rows())
         self.mega_hosts = mega_hosts or ["www.coolpc.com.tw"]
-        # driver-step wall seconds, accumulated across waves. The wave loop
-        # has exactly four blocking driver actions (everything between them
-        # is lazy plan building), so these four cover the whole wave wall:
-        # pending_probe | fetch (politeness+schedule+fetch UDF, materialized
-        # by fetched.count) | children (canonicalize+bloom+seen, by
-        # new_children.count) | commit (the concurrent snapshot writes).
-        # Every Spark job a phase submits also carries the job description
-        # "wave:<phase>" (the commit's writes "commit:<table>", the seed
-        # commit's "seed_commit:<table>"; invalidate() tags its jobs
-        # "invalidate:<step>"), which is how tools/profile_wave.py groups
-        # event-log stages.
+        # driver-step wall seconds, accumulated across waves, around the
+        # wave loop's four blocking driver actions: pending_probe | fetch
+        # (politeness+schedule+fetch UDF, materialized by fetched.count) |
+        # children (canonicalize+bloom+seen, by new_children.count) | commit
+        # (the concurrent snapshot writes). The lazy plan building between
+        # them is outside these timers: the four covered 71-76 % of wave
+        # wall on a 13-wave run. Every Spark job a phase submits also
+        # carries the job description "wave:<phase>" (the commit's writes
+        # "commit:<table>", the seed commit's "seed_commit:<table>";
+        # invalidate() tags its jobs "invalidate:<step>"), which is how
+        # `bench.py --engine` groups event-log stages.
         self.phase_seconds: dict[str, float] = {}
 
     def _phase(self, name: str, t0: float) -> None:

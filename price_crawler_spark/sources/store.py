@@ -13,9 +13,11 @@ sandbox has no Iceberg runtime jar, so this shim provides the same contract
     directories from the failed attempt are simply not referenced, so the
     wave re-runs idempotently without re-using partial output.
 
-Tables are either ``replace`` mode (full new state each commit: frontier,
-seen, bloom) or ``append`` mode (documents, fetch_log: the snapshot's file
-list grows). On Iceberg these map to REPLACE / APPEND snapshot operations.
+Tables are either ``replace`` mode (full new state each commit: pending,
+bloom) or ``append`` mode (seen, frontier_log, documents, fetch_log: the
+snapshot's file list grows). A table's mode is per commit: waves append to
+frontier_log, and ``CrawlRun.invalidate()`` replaces it. On Iceberg these
+map to REPLACE / APPEND snapshot operations.
 """
 
 from __future__ import annotations
@@ -115,12 +117,3 @@ class SnapshotStore:
         paths = [os.path.join(self.root, p) for p in cur["tables"][name]]
         return spark.read.parquet(*paths)
 
-    def rollback(self, snap_id: int) -> None:
-        manifest = self._read_manifest()
-        manifest["snapshots"] = [
-            s for s in manifest["snapshots"] if s["id"] <= snap_id
-        ]
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path)
