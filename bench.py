@@ -425,7 +425,9 @@ def run_engine() -> None:
     plan building between the steps is outside them).
     ``stage_seconds_by_description`` groups the event log's stages by the
     job tags the engine sets: ``wave:<phase>``, ``commit:<table>``,
-    ``seed_commit:<table>`` and ``invalidate:<step>``."""
+    ``seed_commit:<table>`` and ``invalidate:<step>``. ``root_bytes``,
+    ``root_files`` and ``manifest_bytes`` are the crawl root's footprint
+    after the waves: the live snapshot's data plus the manifest."""
     import tempfile
 
     os.environ.setdefault("SPARK_GRAFT_CATALOG_N", "3000")
@@ -464,6 +466,12 @@ def run_engine() -> None:
         n_urls = run.frontier().count()
         dt = time.time() - t0
         phases = {k: round(v, 2) for k, v in run.phase_seconds.items()}
+        files = [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs]
+        footprint = {
+            "root_bytes": sum(os.path.getsize(f) for f in files),
+            "root_files": len(files),
+            "manifest_bytes": os.path.getsize(os.path.join(root, "manifest.json")),
+        }
         spark.stop()  # closes the event log
         stages = aggregate_event_log(evdir, t0)
     print(json.dumps({
@@ -483,6 +491,7 @@ def run_engine() -> None:
             "shuffle_write_mb": round(sum(s["sh_write_mb"] for s in stages), 2),
         },
         "stage_seconds_by_description": stage_seconds_by_description(stages),
+        **footprint,
         "catalog_n": int(os.environ["SPARK_GRAFT_CATALOG_N"]),
         "cpus": CPUS,
     }))

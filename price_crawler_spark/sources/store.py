@@ -8,26 +8,88 @@ sandbox has no Iceberg runtime jar, so this shim provides the same contract
     Bloom shards, documents, fetch_log — one logical commit per crawl wave,
     north rule: "resumable from checkpoint");
   * readers only ever see committed snapshots (manifest swap via
-    ``os.replace``, which is atomic on POSIX);
-  * a killed run leaves the manifest at the previous snapshot; orphan data
-    directories from the failed attempt are simply not referenced, so the
-    wave re-runs idempotently without re-using partial output.
+    ``os.replace``, which is atomic on POSIX).
 
 Tables are either ``replace`` mode (full new state each commit: pending,
 bloom) or ``append`` mode (seen, frontier_log, documents, fetch_log: the
 snapshot's file list grows). A table's mode is per commit: waves append to
 frontier_log, and ``CrawlRun.invalidate()`` replaces it. On Iceberg these
 map to REPLACE / APPEND snapshot operations.
+
+Retention is the current snapshot only (Iceberg's snapshot expiry with
+``retain_last=1``). A commit runs in three steps:
+
+  1. write every table's new data directory;
+  2. ``os.replace`` the manifest — the single atomic commit point;
+  3. delete every data directory the new current snapshot does not list:
+     the replaced groups of the previous snapshot (its ``pending``,
+     ``bloom`` and, after ``invalidate()``, ``frontier_log``) and any
+     orphans a failed attempt left behind.
+
+A crash before step 2 leaves the previous snapshot intact with unreferenced
+orphans; a crash after it leaves only orphans. Either way the next
+successful commit removes them. Nothing reads a superseded snapshot: resume
+reads the current one, and the append-only history stays because the
+current snapshot lists every group of it. The store has one writer at a
+time: a commit deletes whatever is not listed, including another writer's
+unswapped data.
+
+The manifest keeps every snapshot entry as the commit log (id, time, table
+file lists, meta); only the entry of the current snapshot points at data
+that still exists. Each entry records its format version, and the current
+one also every table's schema (``StructType`` JSON, all fields nullable, as
+parquet reads them back), so ``read()`` runs no footer-inference job. An
+append table's schema is the union of its groups' columns in first-seen
+order; rows of a group written before a column existed read back null in
+it. A snapshot written before schemas were stored (no ``format``) is read
+with ``mergeSchema``, and its next commit stores the merged schemas; a
+newer format is refused. Every table is written with zstd.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# version 1: snapshot entries carry ``schemas``; absent means pre-version
+FORMAT_VERSION = 1
+CODEC = "zstd"
+
+
+def _nullable(t):
+    """A schema JSON value with every nullability flag set, the form in
+    which parquet files read back."""
+    if isinstance(t, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v)
+            for k, v in t.items()
+        }
+    if isinstance(t, list):
+        return [_nullable(v) for v in t]
+    return t
+
+
+def _union_schema(name: str, prior: dict, new: dict) -> dict:
+    """``prior``'s fields, then those of ``new`` it lacks. A column whose
+    type changed is refused: a group would read back as the wrong type."""
+    have = {f["name"]: f for f in prior["fields"]}
+    for f in new["fields"]:
+        if f["name"] in have and have[f["name"]]["type"] != f["type"]:
+            raise ValueError(
+                f"table {name!r}: column {f['name']!r} is "
+                f"{have[f['name']]['type']}, an append wrote {f['type']}"
+            )
+    extra = [f for f in new["fields"] if f["name"] not in have]
+    return {**prior, "fields": prior["fields"] + extra}
 
 
 class SnapshotStore:
@@ -43,7 +105,14 @@ class SnapshotStore:
         if not os.path.exists(self._manifest_path):
             return {"snapshots": []}
         with open(self._manifest_path) as f:
-            return json.load(f)
+            manifest = json.load(f)
+        snaps = manifest["snapshots"]
+        if snaps and snaps[-1].get("format", 0) > FORMAT_VERSION:
+            raise ValueError(
+                f"{self._manifest_path}: snapshot {snaps[-1]['id']} has format "
+                f"{snaps[-1]['format']}; this store reads up to {FORMAT_VERSION}"
+            )
+        return manifest
 
     def current(self) -> dict | None:
         snaps = self._read_manifest()["snapshots"]
@@ -60,12 +129,18 @@ class SnapshotStore:
         meta: dict | None = None,
         job_prefix: str = "commit",
     ) -> int:
-        """Write all table data, then atomically swap the manifest. Each
-        table's write jobs carry the description ``<job_prefix>:<table>``."""
+        """Write all table data, atomically swap the manifest, then delete
+        the data the new snapshot no longer lists. Each table's write jobs
+        carry the description ``<job_prefix>:<table>``."""
         manifest = self._read_manifest()
         cur = manifest["snapshots"][-1] if manifest["snapshots"] else None
         snap_id = (cur["id"] + 1) if cur else 0
         tables: dict[str, list[str]] = dict(cur["tables"]) if cur else {}
+        # only the current entry carries schemas: a superseded entry's data
+        # is expired, so its schemas would only grow the manifest
+        schemas: dict[str, dict] = {
+            name: json.loads(js) for name, js in cur.pop("schemas", {}).items()
+        } if cur else {}
         token = uuid.uuid4().hex[:8]
 
         # the per-table writes are independent Spark jobs — run them
@@ -85,22 +160,36 @@ class SnapshotStore:
             # job descriptions are thread-local: tag this writer thread's
             # jobs with the table it writes
             df.sparkSession.sparkContext.setJobDescription(f"{job_prefix}:{name}")
-            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+            df.write.mode("overwrite").option("compression", CODEC).parquet(
+                os.path.join(self.root, rel)
+            )
 
         if writes:
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
                 list(pool.map(_write, writes))  # re-raises worker errors
-        for name, rel, _df, replace in writes:
-            if replace:
-                tables[name] = [rel]
-            else:
-                tables[name] = list(tables.get(name, [])) + [rel]
+        for name, rel, df, replace in writes:
+            schema = _nullable(df.schema.jsonValue())
+            if replace or name not in tables:
+                tables[name], schemas[name] = [rel], schema
+                continue
+            if name not in schemas:  # appending to a pre-version table
+                schemas[name] = _nullable(
+                    self.read(df.sparkSession, name).schema.jsonValue()
+                )
+            tables[name] = tables[name] + [rel]
+            schemas[name] = _union_schema(name, schemas[name], schema)
 
         manifest["snapshots"].append(
             {
                 "id": snap_id,
                 "ts": time.time(),
+                "format": FORMAT_VERSION,
                 "tables": tables,
+                # compact strings, as ``StructType.json()`` spells them
+                "schemas": {
+                    name: json.dumps(sc, separators=(",", ":"))
+                    for name, sc in schemas.items()
+                },
                 "meta": meta or {},
             }
         )
@@ -108,12 +197,31 @@ class SnapshotStore:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic commit point
+        self._expire(tables)
         return snap_id
+
+    def _expire(self, tables: dict[str, list[str]]) -> None:
+        """Delete every data directory and manifest temp file that the
+        current snapshot (``tables``) does not list. Runs after the swap, so
+        a failure here leaves only orphans, which the next commit removes;
+        it never fails a commit that has already happened."""
+        live = {rel for rels in tables.values() for rel in rels}
+        data = os.path.join(self.root, "data")
+        for name in os.listdir(data) if os.path.isdir(data) else []:
+            for group in os.listdir(os.path.join(data, name)):
+                if f"data/{name}/{group}" not in live:
+                    shutil.rmtree(os.path.join(data, name, group), ignore_errors=True)
+        for tmp in glob.glob(glob.escape(self._manifest_path) + ".tmp.*"):
+            with contextlib.suppress(OSError):
+                os.remove(tmp)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame | None:
         cur = self.current()
         if not cur or name not in cur["tables"]:
             return None
         paths = [os.path.join(self.root, p) for p in cur["tables"][name]]
-        return spark.read.parquet(*paths)
-
+        stored = cur.get("schemas", {}).get(name)
+        if stored is None:  # written before schemas were stored
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        schema = StructType.fromJson(json.loads(stored))
+        return spark.read.schema(schema).parquet(*paths)

@@ -381,6 +381,141 @@ def test_crash_mid_commit_is_invisible(spark, tmp_path, oracle, monkeypatch):
     assert docs.count() == docs.select("doc_id").distinct().count()
 
 
+def _data_groups(root) -> set[str]:
+    """Every ``data/<table>/<group>`` directory under a store root."""
+    import os
+
+    data = os.path.join(root, "data")
+    return {
+        f"data/{t}/{g}"
+        for t in os.listdir(data)
+        for g in os.listdir(os.path.join(data, t))
+    }
+
+
+def _listed_groups(store) -> set[str]:
+    return {rel for rels in store.current()["tables"].values() for rel in rels}
+
+
+def test_crash_before_swap_leaves_no_orphans_after_next_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that dies after its data writes but before the manifest swap
+    leaves orphan directories and a manifest temp file; the next successful
+    commit deletes them along with the data it supersedes."""
+    import os
+
+    import price_crawler_spark.sources.store as store_mod
+
+    store = store_mod.SnapshotStore(str(tmp_path))
+
+    def commit(i):
+        store.commit(
+            tables_replace={"pending": spark.range(i, i + 3)},
+            tables_append={"seen": spark.range(i, i + 1)},
+        )
+
+    commit(0)
+    real_replace = store_mod.os.replace
+
+    def crash(src, dst):
+        raise OSError("simulated crash before manifest swap")
+
+    monkeypatch.setattr(store_mod.os, "replace", crash)
+    with pytest.raises(OSError):
+        commit(10)
+    monkeypatch.setattr(store_mod.os, "replace", real_replace)
+    assert store.current()["id"] == 0
+    assert len(_data_groups(store.root) - _listed_groups(store)) == 2
+
+    commit(20)
+    assert _data_groups(store.root) == _listed_groups(store)
+    assert [f for f in os.listdir(store.root) if f.startswith("manifest")] == [
+        "manifest.json"
+    ]
+    assert sorted(r[0] for r in store.read(spark, "pending").collect()) == [20, 21, 22]
+    assert sorted(r[0] for r in store.read(spark, "seen").collect()) == [0, 20]
+
+
+def test_commit_keeps_only_live_data(spark, cuckoo_wave0, tmp_path):
+    """After the seed commit, one wave and an invalidate(), the data
+    directories are exactly those the current snapshot lists: the replaced
+    pending, bloom and frontier_log groups are gone, the append history
+    stays."""
+    run = _open_copy(spark, cuckoo_wave0, tmp_path / "root")
+    assert _data_groups(run.store.root) == _listed_groups(run.store)
+    fetched = sorted(
+        r[0] for r in run.documents().filter("wave = 0").select("doc_id").collect()
+    )
+    assert run.invalidate(fetched[:2]) == 2
+    assert _data_groups(run.store.root) == _listed_groups(run.store)
+    tables = run.store.current()["tables"]
+    assert len(tables["seen"]) == 2  # seed commit and wave 0
+    assert all(len(tables[t]) == 1 for t in ("pending", "bloom", "frontier_log"))
+
+
+def test_append_schema_evolution(spark, tmp_path):
+    """An append whose group adds a column reads every group with it; the
+    earlier group's rows come back null. The schema is stored, so no read
+    depends on which group's footer Spark would infer from."""
+    from price_crawler_spark.sources.store import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path))
+    store.commit(tables_append={"fetch_log": spark.range(2).select(
+        F.col("id").alias("wave"))})
+    store.commit(tables_append={"fetch_log": spark.range(2, 3).select(
+        F.col("id").alias("wave"), F.lit(7).alias("pending_size"))})
+    got = store.read(spark, "fetch_log")
+    assert got.columns == ["wave", "pending_size"]
+    assert sorted(tuple(r) for r in got.collect()) == [(0, None), (1, None), (2, 7)]
+    with pytest.raises(ValueError, match="pending_size"):
+        store.commit(tables_append={"fetch_log": spark.range(1).select(
+            F.col("id").alias("wave"), F.lit("x").alias("pending_size"))})
+
+
+def test_pre_version_snapshot_reads_and_upgrades(spark, tmp_path):
+    """A snapshot written before schemas were stored reads with its groups'
+    merged schema, and the next commit stores that schema; a snapshot of a
+    newer format is refused."""
+    import json
+    import os
+
+    from price_crawler_spark.sources.store import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path))
+    store.commit(tables_append={"fetch_log": spark.range(1).select(
+        F.col("id").alias("wave"), F.lit(7).alias("pending_size"))})
+    store.commit(tables_append={"fetch_log": spark.range(1, 2).select(
+        F.col("id").alias("wave"))})
+    path = os.path.join(store.root, "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    for snap in manifest["snapshots"]:
+        snap.pop("format")
+        snap.pop("schemas", None)
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+    def rows():
+        return sorted(tuple(r) for r in store.read(spark, "fetch_log")
+                      .select("wave", "pending_size").collect())
+
+    assert rows() == [(0, 7), (1, None)]
+    store.commit(tables_append={"fetch_log": spark.range(2, 3).select(
+        F.col("id").alias("wave"))})
+    stored = json.loads(store.current()["schemas"]["fetch_log"])
+    assert [f["name"] for f in stored["fields"]] == ["wave", "pending_size"]
+    assert rows() == [(0, 7), (1, None), (2, None)]
+
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["snapshots"][-1]["format"] += 1
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="format"):
+        store.read(spark, "fetch_log")
+
+
 def test_failed_wave_releases_its_caches(spark, tmp_path, monkeypatch):
     """A wave whose commit raises (a write error, a saturated cuckoo shard)
     must not leave its persisted frames cached after it returns."""
