@@ -425,7 +425,10 @@ def run_engine() -> None:
     plan building between the steps is outside them).
     ``stage_seconds_by_description`` groups the event log's stages by the
     job tags the engine sets: ``wave:<phase>``, ``commit:<table>``,
-    ``seed_commit:<table>`` and ``invalidate:<step>``. ``root_bytes``,
+    ``seed_commit:<table>`` and ``invalidate:<step>``. ``wave_s`` and
+    ``janino_compiles`` are each wave's wall seconds and Janino compiles
+    (Spark's ``CodegenMetrics``), the first wave with the seed commit in
+    it. ``root_bytes``,
     ``root_files`` and ``manifest_bytes`` are the crawl root's footprint
     after the waves: the live snapshot's data plus the manifest."""
     import tempfile
@@ -461,7 +464,18 @@ def run_engine() -> None:
             mega_hosts=list(STORE_HOST.values()),
             salt_buckets=ENGINE_SALT_BUCKETS,
         )
-        waves = run.run(max_waves=10)
+        # per wave: wall seconds and Janino compiles (the first wave also
+        # runs the seed commit)
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME()
+        wave_s, wave_compiles = [], []
+        while len(wave_s) < 10:
+            c0, w0 = compiles.getCount(), time.time()
+            if not run.run_wave():
+                break
+            wave_s.append(round(time.time() - w0, 2))
+            wave_compiles.append(compiles.getCount() - c0)
+        waves = len(wave_s)
         n_docs = run.documents().count()
         n_urls = run.frontier().count()
         dt = time.time() - t0
@@ -483,6 +497,8 @@ def run_engine() -> None:
         "urls_per_sec": round(n_docs / dt, 1),
         "driver_phase_seconds": phases,
         "phase_coverage_of_wall": round(sum(phases.values()) / dt, 3),
+        "wave_s": wave_s,
+        "janino_compiles": wave_compiles,
         "eventlog_totals": {
             "n_stages": len(stages),
             "stage_wall_sum_s": round(sum(s["wall_s"] for s in stages), 2),

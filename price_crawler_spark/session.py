@@ -17,6 +17,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -55,6 +56,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a crawl wave generates ~100 classes; with Spark's default codegen
+        # cache of 100 entries they evicted each other, and every steady
+        # wave recompiled most of them (measured with `bench.py --engine`,
+        # see CHANGES.md). A static conf, so it is set at session start.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # G1 (Java 17's default) — an earlier round pinned ParallelGC from a
         # small A/B, but event-log task metrics at 32 cores show ParallelGC
         # melting down under the canonicalize/shuffle allocation rate:

@@ -44,6 +44,29 @@ order; rows of a group written before a column existed read back null in
 it. A snapshot written before schemas were stored (no ``format``) is read
 with ``mergeSchema``, and its next commit stores the merged schemas; a
 newer format is refused. Every table is written with zstd.
+
+File layout. Every table write passes through a ``rebalance`` hint, so AQE
+sizes its part files to ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+whatever the partitioning of the frame that produced it: one part file per
+table per commit at crawl-test sizes, many advisory-sized ones at scale
+(Iceberg sizes data files by target bytes through its write distribution
+the same way). The rebalance costs one shuffle per write. Each write also
+carries per-write Hadoop options (``WRITE_OPTIONS``) and leaves the
+session's configuration as it is: the raw local filesystem, uncached so the
+session's checksummed instance is untouched, writes no ``.crc`` sidecar, and
+the committer writes no ``_SUCCESS`` marker. After a commit ``data/`` holds
+only parquet part files. Neither side file is needed: the manifest, not a
+marker, says which groups are complete, since readers only open the groups
+it names; and parquet 1.16 writes a CRC32 into every data page header
+(``parquet.page.write-checksum.enabled``, on by default), which ``read()``
+verifies (``parquet.page.verify-checksum.enabled``), so a corrupt page fails
+the read as the ``.crc`` check did. Groups of an older root that still hold
+several part files and side files read as before, and expiry removes a
+superseded group whole, side files included.
+
+The parsed manifest is kept between calls and re-read only when
+``os.stat`` shows another file (inode, mtime, size); ``commit()`` keeps what
+it wrote, so a wave parses the manifest at most once.
 """
 
 from __future__ import annotations
@@ -62,6 +85,13 @@ from pyspark.sql.types import StructType
 # version 1: snapshot entries carry ``schemas``; absent means pre-version
 FORMAT_VERSION = 1
 CODEC = "zstd"
+# options of every table write: no ``.crc`` sidecars, no ``_SUCCESS`` marker
+WRITE_OPTIONS = {
+    "compression": CODEC,
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
+}
 
 
 def _nullable(t):
@@ -96,23 +126,39 @@ class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # the parsed manifest and the (inode, mtime, size) it was read at
+        self._manifest: dict = {"snapshots": []}
+        self._manifest_stat: tuple | None = None
 
     @property
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "manifest.json")
 
+    def _stat_key(self) -> tuple | None:
+        try:
+            st = os.stat(self._manifest_path)
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_mtime_ns, st.st_size
+
     def _read_manifest(self) -> dict:
-        if not os.path.exists(self._manifest_path):
+        """The parsed manifest, parsed again only when the file changed.
+        Callers must not mutate it."""
+        key = self._stat_key()
+        if key is None:
             return {"snapshots": []}
-        with open(self._manifest_path) as f:
-            manifest = json.load(f)
-        snaps = manifest["snapshots"]
-        if snaps and snaps[-1].get("format", 0) > FORMAT_VERSION:
-            raise ValueError(
-                f"{self._manifest_path}: snapshot {snaps[-1]['id']} has format "
-                f"{snaps[-1]['format']}; this store reads up to {FORMAT_VERSION}"
-            )
-        return manifest
+        if key != self._manifest_stat:
+            with open(self._manifest_path) as f:
+                manifest = json.load(f)
+            snaps = manifest["snapshots"]
+            if snaps and snaps[-1].get("format", 0) > FORMAT_VERSION:
+                raise ValueError(
+                    f"{self._manifest_path}: snapshot {snaps[-1]['id']} has "
+                    f"format {snaps[-1]['format']}; this store reads up to "
+                    f"{FORMAT_VERSION}"
+                )
+            self._manifest, self._manifest_stat = manifest, key
+        return self._manifest
 
     def current(self) -> dict | None:
         snaps = self._read_manifest()["snapshots"]
@@ -132,14 +178,14 @@ class SnapshotStore:
         """Write all table data, atomically swap the manifest, then delete
         the data the new snapshot no longer lists. Each table's write jobs
         carry the description ``<job_prefix>:<table>``."""
-        manifest = self._read_manifest()
-        cur = manifest["snapshots"][-1] if manifest["snapshots"] else None
+        # the kept manifest is not mutated: a commit that fails before the
+        # swap leaves it equal to the file
+        snaps = self._read_manifest()["snapshots"]
+        cur = snaps[-1] if snaps else None
         snap_id = (cur["id"] + 1) if cur else 0
         tables: dict[str, list[str]] = dict(cur["tables"]) if cur else {}
-        # only the current entry carries schemas: a superseded entry's data
-        # is expired, so its schemas would only grow the manifest
         schemas: dict[str, dict] = {
-            name: json.loads(js) for name, js in cur.pop("schemas", {}).items()
+            name: json.loads(js) for name, js in cur.get("schemas", {}).items()
         } if cur else {}
         token = uuid.uuid4().hex[:8]
 
@@ -160,9 +206,9 @@ class SnapshotStore:
             # job descriptions are thread-local: tag this writer thread's
             # jobs with the table it writes
             df.sparkSession.sparkContext.setJobDescription(f"{job_prefix}:{name}")
-            df.write.mode("overwrite").option("compression", CODEC).parquet(
-                os.path.join(self.root, rel)
-            )
+            df.hint("rebalance").write.mode("overwrite").options(
+                **WRITE_OPTIONS
+            ).parquet(os.path.join(self.root, rel))
 
         if writes:
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
@@ -179,24 +225,30 @@ class SnapshotStore:
             tables[name] = tables[name] + [rel]
             schemas[name] = _union_schema(name, schemas[name], schema)
 
-        manifest["snapshots"].append(
-            {
-                "id": snap_id,
-                "ts": time.time(),
-                "format": FORMAT_VERSION,
-                "tables": tables,
-                # compact strings, as ``StructType.json()`` spells them
-                "schemas": {
-                    name: json.dumps(sc, separators=(",", ":"))
-                    for name, sc in schemas.items()
-                },
-                "meta": meta or {},
-            }
+        entry = {
+            "id": snap_id,
+            "ts": time.time(),
+            "format": FORMAT_VERSION,
+            "tables": tables,
+            # compact strings, as ``StructType.json()`` spells them
+            "schemas": {
+                name: json.dumps(sc, separators=(",", ":"))
+                for name, sc in schemas.items()
+            },
+            "meta": dict(meta or {}),
+        }
+        # only the current entry carries schemas: a superseded entry's data
+        # is expired, so its schemas would only grow the manifest
+        prior = (
+            [*snaps[:-1], {k: v for k, v in cur.items() if k != "schemas"}]
+            if cur else []
         )
+        manifest = {"snapshots": [*prior, entry]}
         tmp = self._manifest_path + f".tmp.{token}"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic commit point
+        self._manifest, self._manifest_stat = manifest, self._stat_key()
         self._expire(tables)
         return snap_id
 
@@ -220,8 +272,9 @@ class SnapshotStore:
         if not cur or name not in cur["tables"]:
             return None
         paths = [os.path.join(self.root, p) for p in cur["tables"][name]]
+        # the page CRCs stand in for the ``.crc`` sidecars
+        reader = spark.read.option("parquet.page.verify-checksum.enabled", "true")
         stored = cur.get("schemas", {}).get(name)
         if stored is None:  # written before schemas were stored
-            return spark.read.option("mergeSchema", "true").parquet(*paths)
-        schema = StructType.fromJson(json.loads(stored))
-        return spark.read.schema(schema).parquet(*paths)
+            return reader.option("mergeSchema", "true").parquet(*paths)
+        return reader.schema(StructType.fromJson(json.loads(stored))).parquet(*paths)

@@ -941,6 +941,184 @@ def test_noop_invalidate_commits_nothing(spark, cuckoo_wave0, tmp_path):
     assert listing() == before
 
 
+# ---- file layout ---------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def cuckoo_invalidated(spark, cuckoo_wave0, tmp_path_factory):
+    """A copy of ``cuckoo_wave0`` after invalidate() of two wave-0 fetches:
+    a seed commit, a wave and an invalidate() commit on one root."""
+    run = _open_copy(spark, cuckoo_wave0, tmp_path_factory.mktemp("inv") / "root")
+    fetched = sorted(
+        r[0] for r in run.documents().filter("wave = 0").select("doc_id").collect()
+    )
+    assert run.invalidate(fetched[:2]) == 2
+    return run.store.root
+
+
+def _data_files(root) -> list[str]:
+    """Every file under ``data/``, relative to the root."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(os.path.join(root, "data"))
+        for f in files
+    )
+
+
+def test_commit_writes_no_side_files(cuckoo_invalidated):
+    """The store's commits leave neither Hadoop ``.crc`` sidecars nor
+    ``_SUCCESS`` markers: the manifest says which groups are complete and
+    parquet pages carry their own CRCs."""
+    files = _data_files(cuckoo_invalidated)
+    assert files
+    assert [f for f in files if f.endswith(".crc") or "_SUCCESS" in f] == []
+
+
+def test_commit_writes_one_part_file_per_group(cuckoo_invalidated):
+    """Each table of each commit is one part file at this size, whatever the
+    partitioning of the frame that produced it (the three-way union of
+    ``pending`` has about a dozen partitions)."""
+    import os
+    from collections import Counter
+
+    files = _data_files(cuckoo_invalidated)
+    assert all(os.path.basename(f).startswith("part-") and f.endswith(".parquet")
+               for f in files)
+    per_group = Counter(os.path.dirname(f) for f in files)
+    assert per_group and set(per_group.values()) == {1}, per_group
+
+
+def test_table_larger_than_advisory_size_splits(spark, tmp_path):
+    """A table larger than ``advisoryPartitionSizeInBytes`` is written as
+    several part files, and reads back as the rows it was given: the scale
+    path of the rebalanced write."""
+    import os
+
+    from price_crawler_spark.sources.store import SnapshotStore
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "64k")
+    try:
+        df = spark.range(0, 200_000, numPartitions=3).select(
+            "id", F.sha2(F.col("id").cast("string"), 256).alias("h"))
+        store = SnapshotStore(str(tmp_path))
+        store.commit(tables_replace={"t": df})
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    (group,) = store.current()["tables"]["t"]
+    parts = [f for f in os.listdir(os.path.join(store.root, group))
+             if f.startswith("part-")]
+    assert len(parts) > 3, parts
+    got = sorted(tuple(r) for r in store.read(spark, "t").collect())
+    assert got == sorted(tuple(r) for r in df.collect())
+
+
+def test_read_verifies_page_checksums(spark, tmp_path):
+    """With no ``.crc`` sidecars, the parquet page CRCs are what catch a
+    corrupt data file: ``read()`` verifies them."""
+    import glob
+
+    from price_crawler_spark.sources.store import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path))
+    store.commit(tables_replace={"t": spark.range(20_000).select(
+        "id", F.col("id").cast("string").alias("s"))})
+    (path,) = glob.glob(str(tmp_path / "data" / "t" / "*" / "part-*.parquet"))
+    with open(path, "r+b") as f:  # a byte inside the first data page
+        f.seek(100)
+        b = f.read(1)
+        f.seek(100)
+        f.write(bytes([b[0] ^ 0xFF]))
+    with pytest.raises(Exception, match="CRC"):
+        store.read(spark, "t").collect()
+
+
+def _to_legacy_layout(spark, root) -> set[str]:
+    """Rewrite every data group of ``root`` as the previous store wrote it:
+    a plain ``df.write.parquet`` of several part files, each with its
+    ``.crc``, plus a ``_SUCCESS`` marker. Returns the rewritten groups."""
+    import os
+    import shutil
+
+    groups = _data_groups(root)
+    for rel in groups:
+        path = os.path.join(root, rel)
+        spark.read.parquet(path).repartition(3).write.parquet(path + ".legacy")
+        shutil.rmtree(path)
+        os.rename(path + ".legacy", path)
+    return groups
+
+
+def test_legacy_layout_root_resumes(spark, cuckoo_wave0, tmp_path):
+    """A root whose groups hold several part files plus ``.crc`` and
+    ``_SUCCESS`` files (the previous layout) resumes, runs a wave and an
+    invalidate(), and its commits delete the superseded groups with their
+    side files. The crawl order and the URL-seen set equal those of the
+    same steps on an untouched copy."""
+    import os
+
+    def steps(run):
+        fetched = sorted(
+            r[0] for r in run.documents().filter("wave = 0").select("doc_id").collect()
+        )
+        assert run.run_wave()
+        assert run.invalidate(fetched[::4]) == len(fetched[::4])
+        assert run.run_wave()
+        order = [tuple(r) for r in run.crawl_order().collect()]
+        seen = sorted(r[0] for r in run.store.read(spark, "seen").collect())
+        return order, seen
+
+    legacy = _open_copy(spark, cuckoo_wave0, tmp_path / "legacy")
+    old_groups = _to_legacy_layout(spark, legacy.store.root)
+    side = {os.path.dirname(f) for f in _data_files(legacy.store.root)
+            if f.endswith(".crc") or "_SUCCESS" in f}
+    assert side == old_groups
+    assert any(
+        len([f for f in os.listdir(os.path.join(legacy.store.root, g))
+             if f.endswith(".parquet")]) > 1
+        for g in old_groups
+    )
+
+    got = steps(legacy)
+    want = steps(_open_copy(spark, cuckoo_wave0, tmp_path / "untouched"))
+    assert got == want
+
+    root = legacy.store.root
+    assert _data_groups(root) == _listed_groups(legacy.store)
+    # the replaced tables' old groups are gone, side files included; the
+    # append history keeps its old groups as they were
+    kept = old_groups & _data_groups(root)
+    assert {g.split("/")[1] for g in kept} == {"seen", "documents", "fetch_log"}
+    side = {os.path.dirname(f) for f in _data_files(root)
+            if f.endswith(".crc") or "_SUCCESS" in f}
+    assert side == kept
+
+
+def test_one_manifest_parse_per_wave(spark, cuckoo_wave0, tmp_path, monkeypatch):
+    """A wave on a resumed root parses ``manifest.json`` at most once: the
+    store keeps the parsed manifest and its commit keeps what it wrote."""
+    import json
+
+    run = _open_copy(spark, cuckoo_wave0, tmp_path / "root")
+    real_load = json.load
+    calls = []
+
+    def counting_load(*args, **kwargs):
+        calls.append(1)
+        return real_load(*args, **kwargs)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    assert run.run_wave()
+    assert len(calls) <= 1
+    assert run.next_wave() == 2
+    assert len(calls) <= 1
+
+
 def test_invalidate_with_pending_relinked_url(spark, tmp_path):
     """invalidate() while pending is non-empty, on a detail page X together
     with the search page P that links it: the next wave re-fetches P, whose
